@@ -1909,9 +1909,7 @@ def q172_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q176 — feature correlation matrix at the monthly-mart grain: Pearson
 # correlation between every pair of monthly KPIs (revenue, quantity,
 # line items, distinct orders). The feature-redundancy screen a
-# modeling pipeline runs before training on mart features. Registered in r9
-# AFTER that round's window budget closed; the deferral was resolved
-# in r10 (driver-green in CORRECTNESS_r10).
+# modeling pipeline runs before training on mart features.
 #
 # Exactness: raw doubles are never float-summed. Monthly values are
 # exact integers (DECIMAL(18,2) sums floored to BIGINT; revenue in

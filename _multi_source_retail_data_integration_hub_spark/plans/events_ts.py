@@ -1039,8 +1039,6 @@ def q166_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q177 — grouped robust-outlier audit (median/MAD modified z-score,
 # Iglewicz-Hoaglin 0.6745*(x-med)/MAD > 3.5): the outlier screen that
 # survives the outliers it is measuring (mean/stddev screens do not).
-# Registered in r9 after that round's window budget closed; the
-# deferral was resolved in r10 (driver-green in CORRECTNESS_r10).
 # Exactness: both medians are
 # exact interpolating percentiles (the q63 engine-parity scheme — at
 # 100 TB the same plan swaps in percentile_approx), and every

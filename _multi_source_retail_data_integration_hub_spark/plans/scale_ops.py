@@ -734,10 +734,10 @@ def q129_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q000 — GENERATION FINGERPRINT guard: one row per testdata table with
 # its row count and an order-independent key-set checksum (same
 # commutative-sum construction as q129, restricted to integer/string/
-# date key columns so no float rendering is involved). Registered
-# FIRST in the driver window on purpose: every CORRECTNESS_rN.json
+# date key columns so no float rendering is involved). Numbered to
+# sort FIRST in the run on purpose: every CORRECTNESS_rN.json
 # self-documents which data generation each engine saw, so any red row
-# elsewhere in the window is immediately attributable — if q000 itself
+# elsewhere in the run is immediately attributable — if q000 itself
 # is red on byte-identical expression trees, the two sides compared
 # different /root/testdata generations (the r4/r5 q81 signature, see
 # CORRECTNESS_NOTES.md); if q000 is green, a red row is code-side.
@@ -802,79 +802,26 @@ def q000_generation_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q00c/q00d/q00e/q00l/q00o — PER-TABLE generation fingerprints, and
-# q997 — the END-OF-WINDOW fingerprint twin.
+# q997 — the END-OF-RUN fingerprint twin of q000.
 #
-# q000 proved (round 6) that a generation mismatch HAPPENED but not
-# WHERE (its single hash covers all 10 tables) or WHEN in the ~50-row
-# verification window. These split the guard so a CORRECTNESS_rN.json
-# is self-diagnosing end-to-end:
-#   * one single-table guard per table the chronic red set touches —
-#     customer / documents / lineitem / orders cover every input of
-#     q81 (documents), q103/q128 (lineitem+orders) and q129/q139
-#     (orders+customer+lineitem); events is guarded too because half
-#     the backfill window reads it — the red/green pattern across the
-#     guards NAMES the mismatched table(s);
-#   * q997 runs the IDENTICAL computation as q000 but is registered
-#     LAST in the driver window — head-red + tail-green (or the
-#     reverse) proves a mid-window testdata regeneration, head-green +
-#     tail-green brackets the whole window as one generation, making
-#     any interior red row code-attributable.
-# Each guard is one scan -> scalar row; at 100 TB this is the
+# The registry runs in query-number order, so q000 runs first and q997
+# last. q997 runs the IDENTICAL computation as q000: head-red +
+# tail-green (or the reverse) proves the testdata was regenerated
+# during the run, and head-green + tail-green brackets the whole run as
+# one generation, making any interior red row code-attributable. A red
+# q000 names the mismatched table itself: it returns one row per table.
+# The guard is one scan -> scalar row per table; at 100 TB this is the
 # snapshot-consistency preflight a long verification batch needs
 # anyway (same construction as q129's content checksum).
 # ---------------------------------------------------------------------------
-def _fingerprint_one_table(
-    spark: SparkSession, sf_dir: str, table: str
-) -> DataFrame:
-    from ..operators.maintenance import content_checksum
-
-    return content_checksum(
-        load_table(spark, sf_dir, table), _FINGERPRINT_COLS_SPARK[table]
-    ).select(
-        F.lit(table).alias("table_name"),
-        "n_rows",
-        F.col("checksum").alias("key_checksum"),
-    )
-
-
-def _fingerprint_one_sql(table: str) -> str:
-    return _checksum_table_sql(table, _FINGERPRINT_COLS[table], "key_checksum")
-
-
-@query("q00c_fingerprint_customer", oracle=_fingerprint_one_sql("customer"))
-def q00c_fingerprint_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fingerprint_one_table(spark, sf_dir, "customer")
-
-
-@query("q00d_fingerprint_documents", oracle=_fingerprint_one_sql("documents"))
-def q00d_fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fingerprint_one_table(spark, sf_dir, "documents")
-
-
-@query("q00e_fingerprint_events", oracle=_fingerprint_one_sql("events"))
-def q00e_fingerprint_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fingerprint_one_table(spark, sf_dir, "events")
-
-
-@query("q00l_fingerprint_lineitem", oracle=_fingerprint_one_sql("lineitem"))
-def q00l_fingerprint_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fingerprint_one_table(spark, sf_dir, "lineitem")
-
-
-@query("q00o_fingerprint_orders", oracle=_fingerprint_one_sql("orders"))
-def q00o_fingerprint_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fingerprint_one_table(spark, sf_dir, "orders")
-
-
 @query("q997_generation_fingerprint_tail", oracle=_q000_sql())
 def q997_generation_fingerprint_tail(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Byte-identical twin of q000, pinned to the END of the driver's
-    verification window (see __spark_entry__._ordered). Any
-    difference between the q000 and q997 rows of one artifact is a
-    mid-window data regeneration, observed rather than inferred."""
+    """Byte-identical twin of q000, sorted to the END of the run (see
+    __spark_entry__._ordered). Any difference between the q000 and
+    q997 rows of one artifact is a mid-run data regeneration, observed
+    rather than inferred."""
     return q000_generation_fingerprint(spark, sf_dir)
 
 
@@ -1231,8 +1178,6 @@ def q145_mart_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from single sets to SET ALGEBRA, which is what sketches exist for at
 # 100 TB (union = O(1) register merge; production swaps
 # approx_count_distinct for a mergeable DataSketches HLL column).
-# Registered in r9 after that round's window budget closed; the
-# deferral was resolved in r10 (driver-green in CORRECTNESS_r10).
 #
 # Scale shape: one distinct (type,user) projection; the pair-tagged
 # union rows amplify it by (|types|-1) — bounded by the type domain,

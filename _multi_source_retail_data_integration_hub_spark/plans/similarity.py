@@ -975,9 +975,7 @@ def q173_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # members only. The synthetic batch makes both outcomes real: mutants
 # with the last 8 dims zeroed stay ~0.94 cosine to their source
 # (dropped), mutants with the first 32 dims zeroed fall to ~0.71
-# (kept). Registered in r9 after that round's window budget closed and
-# deferred; the deferral was resolved in r10 (q174-q178 led the r10
-# window and all five are driver-green in CORRECTNESS_r10).
+# (kept).
 #
 # Scale shape: the batch is the small side by contract — one Arrow
 # matmul pass against the O(MAX_NLIST) broadcast centroid matrix,

@@ -4303,9 +4303,7 @@ def q171_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # word and characters per BPE token, by language — the standard
 # tokenizer-evaluation table (a vocabulary trained on one language mix
 # "taxes" the others with higher fertility; this measures exactly
-# that, on the q137-learned merges). Registered in r9 after that
-# round's window budget closed; the deferral was resolved in r10
-# (driver-green in CORRECTNESS_r10).
+# that, on the q137-learned merges).
 #
 # Shares the session BPE training run (_bpe_rules) and tokenized
 # corpus (_doc_tokens); the oracle shares q141's learn->apply CTE

@@ -1,6 +1,9 @@
 """SparkSession factory.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the
+Local runs use one JVM sized to the host: ``local[N]`` over the cores
+this process may run on, and a driver heap of the smaller of 16g and
+three quarters of physical RAM. ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEMORY`` override either for a deployment. The
 configuration below is chosen so the *same* logical plans scale to a
 multi-executor cluster: AQE on (runtime join selection, partition
 coalescing, skew-join splitting), UTC session timezone (the reference
@@ -18,7 +21,9 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
 def get_spark(app_name: str = "retail_hub_spark", extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or f"{min(16 << 30, phys * 3 // 4) >> 20}m"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -28,7 +33,7 @@ def get_spark(app_name: str = "retail_hub_spark", extra_conf: dict | None = None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # a join whose keys are a SUPERSET of a bucketed scan's keys

@@ -115,12 +115,6 @@ def main() -> None:
         pass  # warmup is best-effort; queries still run without it
 
     queries = entrymod.queries()
-    # Retired per-table guards stay registered for incident diagnosis
-    # but are demoted from the suite loop (r8 verdict ask #7): ~1.7 s/run
-    # of permanent diagnostic spend the window protocol no longer needs —
-    # q000 + q997 retain the generation bracket.
-    for g in getattr(entrymod, "_RETIRED_GUARDS", ()):
-        queries.pop(g, None)
     # Exact-demo twins demoted from the suite loop (r9 verdict ask #6):
     # q16/q54 are deliberately SinglePartition exact demos whose scale
     # paths (q146 Pareto curve, q142 histogram decile cutpoints) stay
@@ -135,8 +129,7 @@ def main() -> None:
     # rounds 1-2: cheap JVM-only queries run first and absorb residual
     # per-subsystem first-use costs the warmup can't reach (per-plan
     # janino compiles, AQE machinery), so heavy-query timings reflect
-    # steady-state plan cost. Registration order (priority-first for the
-    # driver's correctness window) is independent of bench order.
+    # steady-state plan cost.
     # SPARK_GRAFT_BENCH_RUNS > 1 keeps value/queries at the FIRST run
     # (the driver's single-run convention, comparable with prior
     # rounds) and adds a best-of-N "steady" block — the number to
@@ -218,7 +211,7 @@ def main() -> None:
         run_config={
             "sf_dir": sf_dir,
             "runs": runs,
-            "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+            "cpus": str(spark.sparkContext.defaultParallelism),
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             "suite_order": "sorted(name)",
             "demoted_demos": demoted_demos,
@@ -259,7 +252,7 @@ def _update_floor(steady_query: dict[str, float], sf, spark) -> None:
     becomes unreachable under the canonical setup."""
     floor_path = os.path.join(REPO, "bench_floor.json")
     run_cfg = {
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": str(spark.sparkContext.defaultParallelism),
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     }
     prior = {}

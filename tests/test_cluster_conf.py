@@ -59,3 +59,14 @@ def test_profile_applies_to_live_session(spark):
                     spark.conf.set(k, v)
             except Exception:
                 pass  # submit-time keys that never applied
+
+
+def test_driver_memory_fits_the_host(spark):
+    """The session's driver heap must not exceed physical RAM: a heap
+    the host cannot back swaps or gets the JVM killed under load."""
+    import os
+
+    setting = spark.sparkContext.getConf().get("spark.driver.memory")
+    heap = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(setting)
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert 0 < heap <= phys, f"spark.driver.memory={setting} vs {phys} bytes of RAM"

@@ -5,7 +5,6 @@ downgrades the correctness gate to rows-only — fail here instead)."""
 import glob
 import os
 import re
-import sys
 
 import pytest
 
@@ -24,13 +23,9 @@ def test_every_query_has_an_oracle():
 
 
 def test_query_names_follow_convention():
-    # optional single letter suffix: the per-table generation-fingerprint
-    # guards (q00d/q00e/q00l/q00o) key on the guarded table's initial
-    pat = re.compile(r"^q\d{2,3}[a-z]?_[a-z0-9_]+$")
+    pat = re.compile(r"^q\d{2,3}_[a-z0-9_]+$")
     bad = [n for n in entry.queries() if not pat.match(n)]
     assert not bad, bad
-    nums = [n.split("_", 1)[0] for n in entry.queries()]
-    assert len(nums) == len(set(nums)), "duplicate query numbers"
 
 
 def test_oracles_reference_only_registered_tables():
@@ -51,148 +46,15 @@ def test_oracles_reference_only_registered_tables():
             ), f"{name}: unknown relation {t!r}"
 
 
-def test_window_protocol_layout():
-    """The self-diagnosing window protocol (CORRECTNESS_NOTES.md,
-    rounds 7-11): the driver records the first ~50 registered queries,
-    so the fingerprint guard must be FIRST and the end-of-window
-    fingerprint twin pinned at exactly position 50 — a refactor of
-    _ordered() that silently moves either breaks the bracket
-    inference. Round-11 rotation (r10 verdict ask #1): the per-table
-    guards stay retired PAST the window; round-14 rotation (after
-    CORRECTNESS_r13 scored the r9 block + q179-q186): the remainder of
-    the r10 block (q23_minhash_signatures onward — now the oldest
-    driver rows) leads the backfill; no new registrations this round,
-    so the window is guard + 48 backfill names + tail guard."""
+def test_registry_runs_in_query_number_order():
+    """queries() and oracle_sql() share one order: ascending query
+    number, so the q000/q997 generation fingerprints bracket the run."""
     names = list(entry.queries())
+    assert names == list(entry.oracle_sql())
     assert names[0] == "q000_generation_fingerprint"
-    assert names[49] == "q997_generation_fingerprint_tail"
-    # retired guards stay registered but OUTSIDE the recorded window
-    for g in entry._RETIRED_GUARDS:
-        assert names.index(g) > 49, f"{g} must sit past the window"
-    # the r10 block remainder leads the backfill and lands in the
-    # window (structural, so adding a new query never silently
-    # displaces the oldest rows)
-    carries = ["q23_minhash_signatures", "q24_lsh_candidates", "q25_simhash"]
-    assert entry._BACKFILL[:3] == carries
-    for q in carries:
-        assert names.index(q) < 49, f"{q} must land in the r14 window"
-    # the leading stale block fits in this window — STRICT: every one
-    # of the 48 leading backfill names must be a registered query (a
-    # typo or deregistration must fail here, not silently admit a
-    # different 48th query into the recorded window; 48 = the full
-    # non-guard window, no new registrations take slots this round)
-    stale = entry._BACKFILL[:48]
-    unregistered = [q for q in stale if q not in names]
-    assert not unregistered, f"unregistered backfill names: {unregistered}"
-    assert all(names.index(q) < 49 for q in stale)
-    assert len(names) == len(set(names))
-    # rotation completeness: EVERY registered non-guard query must
-    # appear in _BACKFILL (and every _BACKFILL name must be
-    # registered) — a query missing from the list would fall into
-    # _ordered()'s trailing 'rest' bucket and silently never rotate
-    # into a driver window; a stale name would shrink the window
-    guards = (
-        set(entry._GUARD_HEAD)
-        | set(entry._RETIRED_GUARDS)
-        | {entry._GUARD_TAIL}
-        | set(entry._DEFER_TO_NEXT_WINDOW)
-    )
-    backfill = set(entry._BACKFILL)
-    assert len(entry._BACKFILL) == len(backfill), "duplicate backfill names"
-    never_rotates = set(names) - backfill - guards
-    # queries NEW this round are picked up by the is-new check instead;
-    # a non-numeric id prefix (q00c-style guards should all be in the
-    # guard sets above) is itself a finding — assert with the name
-    # rather than letting int() raise an opaque ValueError
-    unparseable = {
-        q for q in never_rotates if not q.split("_", 1)[0][1:].isdigit()
-    }
-    assert not unparseable, f"non-numeric query id outside guard sets: {unparseable}"
-    never_rotates = {
-        q for q in never_rotates if int(q.split("_", 1)[0][1:]) < 187
-    }
-    assert not never_rotates, f"registered but never rotates: {never_rotates}"
-    stale_names = backfill - set(names)
-    assert not stale_names, f"backfill names not registered: {stale_names}"
-
-
-def test_backfill_matches_artifacts():
-    """The committed _BACKFILL must equal tools/regen_backfill.py's
-    regeneration from the committed CORRECTNESS_r*.json artifacts
-    (oldest newest-driver-row first, ascending query number within a
-    round). This turns the round-open rotation into a forcing
-    function: committing a new round's artifact without regenerating
-    the list goes red here instead of the window silently re-scoring
-    fresh rows while the stale block ages another round."""
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    try:
-        import regen_backfill as rb
-    finally:
-        sys.path.pop(0)
-    # the tool's stdlib-only guard mirror must match the entry module
-    guards = (
-        set(entry._GUARD_HEAD) | set(entry._RETIRED_GUARDS) | {entry._GUARD_TAIL}
-    )
-    assert guards == set(rb.GUARDS), "regen_backfill.GUARDS drifted from entry"
-    # pass the live registry: orphan artifact rows (renamed queries)
-    # drop exactly, and a registered query missing from _BACKFILL is
-    # forced into the regeneration so this test catches it
-    regen = rb.regenerate(registered=set(entry.queries()))
-    committed = list(entry._BACKFILL)
-    assert rb.current_backfill() == committed, "textual parse drifted"
-    if committed != regen:
-        drift = next(
-            (
-                (i, a, b)
-                for i, (a, b) in enumerate(zip(committed, regen))
-                if a != b
-            ),
-            None,
-        )
-        detail = (
-            f"first drift at index {drift[0]}: committed {drift[1]!r} vs "
-            f"regenerated {drift[2]!r}"
-            if drift
-            else f"lengths differ: committed {len(committed)} vs "
-            f"regenerated {len(regen)}"
-        )
-        raise AssertionError(
-            "_BACKFILL is stale vs CORRECTNESS artifacts — run "
-            f"`python tools/regen_backfill.py` and paste; {detail}"
-        )
-
-
-def test_backfill_sync_check_trips_on_new_artifact(tmp_path):
-    """Negative twin of test_backfill_matches_artifacts: when a NEW
-    round's artifact lands (freshly scored rows), the regeneration
-    must rotate those rows to the back — i.e. the sync check must go
-    red until the committed list is regenerated, or the forcing
-    function is vacuous."""
-    import json
-    import shutil
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    try:
-        import regen_backfill as rb
-    finally:
-        sys.path.pop(0)
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        shutil.copy(p, tmp_path)
-    entry_copy = tmp_path / "__spark_entry__.py"
-    shutil.copy(os.path.join(repo, "__spark_entry__.py"), entry_copy)
-    head = entry._BACKFILL[:3]  # the current window's leading stale rows
-    fake = {n: {"match": True} for n in ["q000_generation_fingerprint", *head]}
-    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(fake))
-    regen = rb.regenerate(repo=str(tmp_path), entry_path=str(entry_copy))
-    committed = rb.current_backfill(str(entry_copy))
-    assert committed != regen, "sync check failed to trip on a new artifact"
-    # the freshly scored rows must have rotated behind every OTHER
-    # scored query (never-scored mid-freeze additions legitimately
-    # sort after them, so compare within the scored subset only)
-    rows = rb.newest_driver_rows(str(tmp_path))
-    scored = [q for q in regen if q in rows]
-    assert scored[-len(head):] == sorted(head, key=rb._qnum)
+    assert names[-1] == "q997_generation_fingerprint_tail"
+    nums = [int(n.split("_", 1)[0][1:]) for n in names]
+    assert all(a < b for a, b in zip(nums, nums[1:])), "query numbers must increase"
 
 
 def test_no_oracle_output_binds_to_hugeint():
@@ -298,7 +160,7 @@ def test_broadcast_hints_only_on_bounded_relations():
 def test_fingerprint_tail_is_byte_identical_to_head():
     """q997's oracle must be the SAME SQL as q000's and its Spark side
     must delegate to q000 — the bracket only works if the two ends of
-    the window compute the identical fingerprint."""
+    the run compute the identical fingerprint."""
     oracles = entry.oracle_sql()
     assert (
         oracles["q997_generation_fingerprint_tail"]

@@ -72,38 +72,3 @@ def test_scd2_version_increments_beyond_two(spark):
     assert rows[0].effective_end_date == rows[1].effective_start_date
     assert rows[1].effective_end_date == rows[2].effective_start_date
 
-
-def test_delta_merge_staging_legs(spark):
-    """The Delta MERGE twin's staging frame (operators/delta_merge.py,
-    pure-DataFrame logic so it is testable without delta installed):
-    one expire-leg row per incoming row, one insert-leg row per
-    changed-or-new key with version = max(prior)+1, no insert leg for
-    re-sent identical rows."""
-    from _multi_source_retail_data_integration_hub_spark.operators.delta_merge import (
-        scd2_merge_sql,
-        scd2_merge_staging,
-    )
-
-    run1 = snap(spark, [("C1", "Male", 30), ("C2", "Female", 40)])
-    dim1 = scd2_initial(run1, T1)
-    # C1 re-sent identical, C2 changed, C4 new
-    run2 = snap(spark, [("C1", "Male", 30), ("C2", "Female", 41), ("C4", "Female", 22)])
-    staged = scd2_merge_staging(dim1, run2, "customer_id")
-
-    expire = {r.customer_id: r for r in staged.filter("_merge_key IS NOT NULL").collect()}
-    inserts = {r.customer_id: r for r in staged.filter("_merge_key IS NULL").collect()}
-    # expire leg: every incoming row, keyed
-    assert set(expire) == {"C1", "C2", "C4"}
-    assert all(r._merge_key == r.customer_id for r in expire.values())
-    assert all(r._new_version is None for r in expire.values())
-    # insert leg: changed + new only (C1's identical re-send dropped),
-    # versions increment from the stored max
-    assert set(inserts) == {"C2", "C4"}
-    assert inserts["C2"]._new_version == 2 and inserts["C2"].age == 41
-    assert inserts["C4"]._new_version == 1
-
-    stmt = scd2_merge_sql("dim_t", "v", "customer_id", T2, list(run2.columns))
-    # the NOT MATCHED branch must be guarded on the insert leg, or a
-    # brand-new key's expire-leg row would also insert (NULL version)
-    assert "WHEN NOT MATCHED AND s._new_version IS NOT NULL" in stmt
-    assert "t.customer_id = s._merge_key AND t.is_current" in stmt

@@ -1,6 +1,7 @@
 """Record the physical plans of the most expensive bench queries into
-PLANS.md so later rounds can diff plans and catch regressions (e.g. a
-broadcast join silently falling back to sort-merge).
+PLANS.md (generated on demand, not committed) so a plan-affecting
+change can be diffed against the plans before it and regressions
+caught (e.g. a broadcast join silently falling back to sort-merge).
 
 Usage: python tools/dump_plans.py [sf_dir] [query ...]
 """
