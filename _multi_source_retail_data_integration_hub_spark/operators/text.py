@@ -74,8 +74,8 @@ def write_tokens_bucketed(
     by ``token``.
 
     The token twin of ``write_signatures_bucketed`` — the persisted
-    form of the ``_doc_tokens`` session cache
-    (plans/training_data.py): at 100 TB the tokenized corpus is
+    form of the ``_doc_tokens`` session table
+    (plans/training_data.py ``session_table``): at 100 TB the tokenized corpus is
     written ONCE by the ingestion job, and the whole term-statistics
     family reads it back Exchange-free. ``token`` is the right bucket
     key because every downstream shuffle in that family is term-keyed
@@ -850,11 +850,11 @@ def write_signatures_bucketed(
     """Persist the melted LSH band table ``(id, band_id, bucket)``
     bucketed (and sorted) by the candidate join keys.
 
-    The 100 TB layout the signature-cache docstring promises
-    (plans/training_data.py ``_SIG_CACHE``): in a real pipeline
+    The 100 TB layout the ``_mutated_sig`` session table stands in for
+    (plans/training_data.py ``session_table``): in a real pipeline
     signatures are written ONCE by the ingestion job and every dedup
     pass reads them back — nothing corpus-sized lives in any single
-    JVM's heap (SCALE.md r11: the localCheckpoint session caches were
+    JVM's heap (SCALE.md r11: the localCheckpointed session tables were
     the binding x64 capacity wall at 16g). Bucketing by
     ``(band_id, bucket)`` makes the read-side candidate stage
     (``lsh_candidate_pairs_from_bands``) entirely Exchange-free up to

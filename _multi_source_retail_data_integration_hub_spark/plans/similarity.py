@@ -274,52 +274,44 @@ _NEARDUP_CTES = f"""
 def _augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Base corpus + deterministic near-dup mutants (the q37 data
     augmentation), shared by the near-dup pair stage and q158's
-    negative-pair embedding lookups. The lazy PLAN is session-cached
-    (keyed like every other shared stage) because building it costs a
-    driver action — the max(vec_id) offset probe — that repeated
-    callers (q158 touches this once directly and once via the pair
-    stage; bench runs twice) should not re-pay. The frame itself stays
-    unmaterialized: it is a cheap projection both consumers fold into
-    their own pipelines."""
-    from .training_data import _SIG_CACHE, _sig_cache_key
+    negative-pair embedding lookups. The lazy PLAN is a session_table
+    because building it costs a driver action — the max(vec_id) offset
+    probe — that repeated callers (q158 touches this once directly and
+    once via the pair stage; bench runs twice) should not re-pay. The
+    frame itself stays unmaterialized: it is a cheap projection both
+    consumers fold into their own pipelines."""
+    from .training_data import session_table
 
-    key = _sig_cache_key(spark, sf_dir, "aug")
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0] or 0
-    offset = max(NEARDUP_OFFSET, max_id + 1)
-    zeros = F.array(*[F.lit(0.0).cast("float")] * 8)
-    mutants = emb.select(
-        (F.col("vec_id") + offset).alias("vec_id"),
-        F.concat(F.slice("embedding", 1, 56), zeros).alias("embedding"),
-    )
-    aug = emb.select("vec_id", "embedding").unionByName(mutants)
-    _SIG_CACHE[key] = aug
-    return aug
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        max_id = emb.agg(F.max("vec_id")).first()[0] or 0
+        offset = max(NEARDUP_OFFSET, max_id + 1)
+        zeros = F.array(*[F.lit(0.0).cast("float")] * 8)
+        mutants = emb.select(
+            (F.col("vec_id") + offset).alias("vec_id"),
+            F.concat(F.slice("embedding", 1, 56), zeros).alias("embedding"),
+        )
+        return emb.select("vec_id", "embedding").unionByName(mutants)
+
+    return session_table(spark, sf_dir, "aug", build)
 
 
 def _bucket_pair_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id_a, id_b, cos_sim) for every LSH bucket-mate pair (PRE
     near-dup threshold) over the augmented corpus — the shared stage
     behind q37/q53/q158 (the >= threshold side) and q164 (the hard
-    negatives just BELOW it). Session-cached under training_data's
-    _SIG_CACHE discipline (one eviction point,
-    plans/training_data.py::clear_session_caches): in a real pipeline
-    this is the persisted candidate-pair table every downstream
-    consumer filters its own way. Function-level import — q157 imports
-    this module at module level, so the reverse import must stay
-    deferred. The uncached pipeline stays snapshot in PLANS.md via
-    tools/dump_plans.py's EXTRA_PLANS."""
-    from .training_data import _SIG_CACHE, _sig_cache_key
+    negatives just BELOW it). A session_table
+    (plans/training_data.py): in a real pipeline this is the persisted
+    candidate-pair table every downstream consumer filters its own
+    way. Function-level import — q157 imports this module at module
+    level, so the reverse import must stay deferred. The uncached
+    pipeline stays snapshot in PLANS.md via tools/dump_plans.py's
+    EXTRA_PLANS."""
+    from .training_data import session_table
 
-    key = _sig_cache_key(spark, sf_dir, "embcand")
-    cached = _SIG_CACHE.get(key)
-    if cached is None:
-        cached = _bucket_pair_cands_uncached(spark, sf_dir).localCheckpoint()
-        _SIG_CACHE[key] = cached
-    return cached
+    return session_table(spark, sf_dir, "embcand", lambda: (
+        _bucket_pair_cands_uncached(spark, sf_dir).localCheckpoint()
+    ))
 
 
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -804,23 +796,20 @@ _SEMDEDUP_ASSIGN_SQL = f"""
 def _semdedup_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized IVF assignment of the augmented corpus
     (vec_id, qe, nsq, list_id) — the SemDeDup verify stage self-joins
-    it and the flag join reads it again, so it is checkpointed once
-    per session under training_data's _SIG_CACHE discipline (single
-    eviction point, clear_session_caches). In production this is the
+    it and the flag join reads it again, so it is materialized once
+    per session as a session_table. In production this is the
     persisted assignment table, written bucketed by list_id via
     write_members_bucketed so the verify join needs no Exchange."""
     from ..operators.checkpointing import materialize
-    from .training_data import _SIG_CACHE, _sig_cache_key
+    from .training_data import session_table
 
-    key = _sig_cache_key(spark, sf_dir, "semassign")
-    cached = _SIG_CACHE.get(key)
-    if cached is None:
+    def build() -> DataFrame:
         aug = _augmented(spark, sf_dir)
         cq = S.with_quantized(aug, "embedding", "vec_id")
         cents = S.ivf_centroid_matrix(cq, "vec_id")
-        cached = materialize(S.ivf_probes(cq, cents, 1, "vec_id"))
-        _SIG_CACHE[key] = cached
-    return cached
+        return materialize(S.ivf_probes(cq, cents, 1, "vec_id"))
+
+    return session_table(spark, sf_dir, "semassign", build)
 
 
 @query(
@@ -857,30 +846,28 @@ def q167_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(label, pos, s, c): exact integer per-label centroid sums plus
-    contribution counts, materialized once per session (_SIG_CACHE
-    discipline) — |labels| x dim rows, so the checkpoint is tiny and
+    contribution counts, materialized once per session (a
+    session_table) — |labels| x dim rows, so the checkpoint is tiny and
     every q173 consumer (global centroid, vector counts, dot products)
     reads it instead of re-scanning the corpus. Without this the
     physical plan recomputes the posexplode subtree once per consumer
     (three corpus scans at 100 TB)."""
     from ..operators.checkpointing import materialize
-    from .training_data import _SIG_CACHE, _sig_cache_key
+    from .training_data import session_table
 
-    key = _sig_cache_key(spark, sf_dir, "labelcent")
-    cached = _SIG_CACHE.get(key)
-    if cached is None:
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         p = emb.select(
             "label", F.posexplode(S.quantized(F.col("embedding"))).alias("pos0", "v")
         ).select("label", (F.col("pos0") + 1).alias("pos"), "v")
-        cached = materialize(
+        return materialize(
             p.groupBy("label", "pos").agg(
                 F.sum("v").cast("bigint").alias("s"),
                 F.count("*").cast("bigint").alias("c"),
             )
         )
-        _SIG_CACHE[key] = cached
-    return cached
+
+    return session_table(spark, sf_dir, "labelcent", build)
 
 
 # ---------------------------------------------------------------------------
@@ -981,7 +968,7 @@ def q173_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matmul pass against the O(MAX_NLIST) broadcast centroid matrix,
 # then an equi-join on list_id against the persisted (bucketed)
 # members table. Corpus-side work is one-time per session: the
-# raw-corpus assignment is materialized under _SIG_CACHE
+# raw-corpus assignment is materialized as a session_table
 # ("semassign_base" — distinct from q167's augmented-corpus
 # "semassign") and the centroid broadcast handle is shared by the
 # member and batch probe stages.
@@ -1010,26 +997,24 @@ def _probe_batch_sql() -> str:
 def _semdedup_base_assigned(spark: SparkSession, sf_dir: str):
     """(materialized raw-corpus IVF assignment, Broadcast centroid
     handle) for the ingest path. Distinct from q167's "semassign"
-    cache, which assigns the AUGMENTED corpus; the ingest contract is
-    that arriving batches join the REAL corpus's clusters. Cached
-    under the shared _SIG_CACHE discipline so repeated probes (bench
-    RUNS=2, multiple batches per session) re-pay neither the corpus
-    assignment nor the centroid broadcast; both probe stages share
-    the ONE broadcast handle per ivf_probes' own guidance."""
+    session table, which assigns the AUGMENTED corpus; the ingest
+    contract is that arriving batches join the REAL corpus's clusters.
+    A session_table, so repeated probes (bench RUNS=2, multiple
+    batches per session) re-pay neither the corpus assignment nor the
+    centroid broadcast; both probe stages share the ONE broadcast
+    handle per ivf_probes' own guidance."""
     from ..operators.checkpointing import materialize
-    from .training_data import _SIG_CACHE, _sig_cache_key
+    from .training_data import session_table
 
-    key = _sig_cache_key(spark, sf_dir, "semassign_base")
-    cached = _SIG_CACHE.get(key)
-    if cached is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         cq = S.with_quantized(emb, "embedding", "vec_id")
         cents = S.ivf_centroid_matrix(cq, "vec_id")
         bc = spark.sparkContext.broadcast(cents)
         assigned = materialize(S.ivf_probes(cq, bc, 1, "vec_id"))
-        cached = (assigned, bc)
-        _SIG_CACHE[key] = cached
-    return cached
+        return (assigned, bc)
+
+    return session_table(spark, sf_dir, "semassign_base", build)
 
 
 @query(

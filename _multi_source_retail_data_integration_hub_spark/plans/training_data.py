@@ -68,15 +68,9 @@ def _docs_max_id(spark: SparkSession, sf_dir: str) -> int:
     per session replaces one per query build (~13 call sites). The
     scan is the un-fanned ``load_table`` frame: a max over one column
     needs no repartition Exchange."""
-    key = _sig_cache_key(spark, sf_dir, "max_doc_id")
-    v = _SIG_CACHE.get(key)
-    if v is None:
-        v = (
-            load_table(spark, sf_dir, "documents").agg(F.max("doc_id")).first()[0]
-            or 0
-        )
-        _SIG_CACHE[key] = v
-    return v
+    return session_table(spark, sf_dir, "max_doc_id", lambda: (
+        load_table(spark, sf_dir, "documents").agg(F.max("doc_id")).first()[0] or 0
+    ))
 
 
 def _guard_offset(
@@ -131,38 +125,40 @@ _MUTATED_SQL = f"""
   WHERE len({_TOKS}) > 15
 """
 
-#: minhash signature table of the mutated corpus, computed ONCE per
-#: (session, sf_dir) and localCheckpointed. Six registered queries
-#: (q23/q24/q85/q116/q134/q135) consume the identical signature table;
-#: in a real pipeline signatures are a persisted upstream table, not a
-#: per-query recompute — this cache is that contract in-process (the
-#: same shape as the shared shingle/signature materialization inside
-#: q80). The persisted form is REAL since r12:
-#: operators/text.py::write_signatures_bucketed writes the melted band
-#: table bucketed by the join keys and lsh_candidate_pairs_from_bands /
-#: lsh_probe_pairs_from_bands consume it Exchange-free with no
-#: corpus-sized heap state (SCALE.md r12: 16g at 12.8 SF-units vs 96g
-#: for this cache). Keyed by applicationId so a new session never sees
-#: another session's checkpointed blocks.
+#: Session tables, keyed by (applicationId, abspath(sf_dir), name).
+#: Read and written only through ``session_table``; evicted by
+#: ``clear_session_caches``.
 _SIG_CACHE: dict[tuple[str, str, str], object] = {}
 
 
-def _sig_cache_key(spark: SparkSession, sf_dir: str, what: str):
-    import os as _os
+def session_table(spark: SparkSession, sf_dir: str, name: str, build):
+    """Return the session table ``name`` of ``sf_dir``, calling
+    ``build()`` only on the first request for this (session, sf_dir,
+    name).
 
-    return (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), what)
+    A session table is a shared intermediate that several queries
+    read — in a real pipeline a persisted upstream table written once
+    at ingest, not a per-query recompute; this memo is that contract
+    in-process. ``build`` decides how the value is materialized
+    (localCheckpoint, materialize, a collect, a broadcast, a table
+    write). The key carries the applicationId, so a new session never
+    sees another session's checkpointed blocks, and the absolute path,
+    so ``sf_dir`` spellings of one directory share an entry. A
+    ``build`` that raises stores nothing; the next call retries."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
+    if key not in _SIG_CACHE:
+        _SIG_CACHE[key] = build()
+    return _SIG_CACHE[key]
 
 
 def clear_session_caches() -> int:
-    """Drop every session-cache entry (signatures/pairs/labels/tokens/
-    winnow selections/bigram bases + the collected BPE rules) and
-    return how many entries were evicted. The caches model persisted
-    upstream tables, so they deliberately live for the session — but a
-    long-lived driver process that moves on from a corpus (or a memory
-    -pressure hook) can call this to stop retaining them (footprint ~=
-    exploded token table + signature table for the largest sf_dir
-    touched; see SCALE.md). Consumers re-materialize lazily on next
-    use.
+    """Drop every ``session_table`` entry and return how many entries
+    were evicted. Session tables model persisted upstream tables, so
+    they deliberately live for the session — but a long-lived driver
+    process that moves on from a corpus (or a memory-pressure hook)
+    can call this to stop retaining them (footprint ~= exploded token
+    table + signature table for the largest sf_dir touched; see
+    SCALE.md). Consumers re-materialize lazily on next use.
 
     Release timing (r8 advice): the cached frames are
     ``localCheckpoint``-ed, and checkpointed RDD blocks are NOT
@@ -208,44 +204,35 @@ def clear_session_caches() -> int:
 
 
 def _mutated_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _sig_cache_key(spark, sf_dir, "sig")
-    sig = _SIG_CACHE.get(key)
-    if sig is None:
-        sig = T.minhash_signatures(
-            _mutated(spark, sf_dir), "text", "id"
-        ).localCheckpoint()
-        _SIG_CACHE[key] = sig
-    return sig
+    """Minhash signature table of the mutated corpus, shared by
+    q23/q24/q85/q116/q134/q135. Its persisted form is
+    operators/text.py::write_signatures_bucketed, read Exchange-free by
+    lsh_candidate_pairs_from_bands / lsh_probe_pairs_from_bands with no
+    corpus-sized heap state (SCALE.md r12: 16g at 12.8 SF-units vs 96g
+    for this checkpoint)."""
+    return session_table(spark, sf_dir, "sig", lambda: (
+        T.minhash_signatures(_mutated(spark, sf_dir), "text", "id").localCheckpoint()
+    ))
 
 
 def _mutated_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached distinct (id, shingle) table of the mutated
+    """Distinct (id, shingle) session table of the mutated
     corpus — the exact-Jaccard ground-truth side shared by the q80 and
     q181 audits (each previously localCheckpointed its own copy; one
     tokenize+shingle pass per (session, sf_dir) instead). Value-
     identical to computing it inline: shingling is deterministic."""
-    key = _sig_cache_key(spark, sf_dir, "shingles")
-    sh = _SIG_CACHE.get(key)
-    if sh is None:
-        sh = T.distinct_shingles(
-            _mutated(spark, sf_dir), "text", "id"
-        ).localCheckpoint()
-        _SIG_CACHE[key] = sh
-    return sh
+    return session_table(spark, sf_dir, "shingles", lambda: (
+        T.distinct_shingles(_mutated(spark, sf_dir), "text", "id").localCheckpoint()
+    ))
 
 
 def _mutated_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Default-cap (drop-mode) LSH candidate pairs over the cached
     signature table — shared by q24/q116/q135 (q134's subsplit-mode
     pairs differ and stay per-query)."""
-    key = _sig_cache_key(spark, sf_dir, "pairs")
-    pairs = _SIG_CACHE.get(key)
-    if pairs is None:
-        pairs = T.lsh_candidate_pairs(
-            _mutated_sig(spark, sf_dir), "id"
-        ).localCheckpoint()
-        _SIG_CACHE[key] = pairs
-    return pairs
+    return session_table(spark, sf_dir, "pairs", lambda: (
+        T.lsh_candidate_pairs(_mutated_sig(spark, sf_dir), "id").localCheckpoint()
+    ))
 
 
 def _mutated_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,41 +240,27 @@ def _mutated_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by q116 (survivor selection) and q135 (split assignment)."""
     from ..operators.graph import connected_components
 
-    key = _sig_cache_key(spark, sf_dir, "labels")
-    labels = _SIG_CACHE.get(key)
-    if labels is None:
-        # assume_distinct: lsh_candidate_pairs ends in id_a < id_b +
-        # .distinct(), so the operator's symmetric union is duplicate-
-        # free by construction — skip its 2|E| dedup shuffle (r13 s3)
-        labels = connected_components(
-            _mutated_lsh_pairs(spark, sf_dir), "id_a", "id_b",
-            assume_distinct=True,
-        ).localCheckpoint()
-        _SIG_CACHE[key] = labels
-    return labels
+    # assume_distinct: lsh_candidate_pairs ends in id_a < id_b +
+    # .distinct(), so the operator's symmetric union is duplicate-
+    # free by construction — skip its 2|E| dedup shuffle (r13 s3)
+    return session_table(spark, sf_dir, "labels", lambda: connected_components(
+        _mutated_lsh_pairs(spark, sf_dir), "id_a", "id_b", assume_distinct=True
+    ).localCheckpoint())
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded whitespace-token table ``(doc_id, token)`` of the raw
-    corpus, computed ONCE per (session, sf_dir) and localCheckpointed —
-    the token twin of ``_mutated_sig``. Six registered queries
-    (q47/q109/q114/q122/q137 via _bpe_rules/q141) consume the identical
-    explode(tokens(text)) subtree; in a real pipeline the tokenized
-    corpus is a persisted
-    upstream table written by the ingestion job, not a per-query
-    recompute — this cache is that contract in-process. Oracles are
-    unaffected: tokenization is deterministic, so the cached table is
-    value-identical to each query's former inline explode."""
-    key = _sig_cache_key(spark, sf_dir, "toks")
-    toks = _SIG_CACHE.get(key)
-    if toks is None:
-        toks = (
-            _docs(spark, sf_dir)
-            .select("doc_id", F.explode(T.tokens(F.col("text"))).alias("token"))
-            .localCheckpoint()
-        )
-        _SIG_CACHE[key] = toks
-    return toks
+    corpus, localCheckpointed as a session table — the token twin of
+    ``_mutated_sig``. Six registered queries (q47/q109/q114/q122/q137
+    via _bpe_rules/q141) consume the identical explode(tokens(text))
+    subtree. Oracles are unaffected: tokenization is deterministic, so
+    the table is value-identical to each query's former inline
+    explode."""
+    return session_table(spark, sf_dir, "toks", lambda: (
+        _docs(spark, sf_dir)
+        .select("doc_id", F.explode(T.tokens(F.col("text"))).alias("token"))
+        .localCheckpoint()
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -1906,9 +1879,8 @@ def _bpe_rules(spark: SparkSession, sf_dir: str) -> list[tuple]:
     training run, exactly as a real pipeline trains a tokenizer once
     and ships the merge list to every encode job. The list is K tiny
     tuples (the merge budget), not data."""
-    key = _sig_cache_key(spark, sf_dir, "bpe_rules")
-    rules = _SIG_CACHE.get(key)
-    if rules is None:
+
+    def build() -> list[tuple]:
         words = (
             _doc_tokens(spark, sf_dir)
             .select(F.lower("token").alias("word"))
@@ -1918,11 +1890,11 @@ def _bpe_rules(spark: SparkSession, sf_dir: str) -> list[tuple]:
             .orderBy(F.desc("freq"), F.asc("word"))
             .limit(BPE_VOCAB_TOP)
         )
-        rules = [
+        return [
             tuple(r) for r in T.bpe_learn_merges(words, BPE_N_MERGES).collect()
         ]
-        _SIG_CACHE[key] = rules
-    return rules
+
+    return session_table(spark, sf_dir, "bpe_rules", build)
 
 
 @query("q137_bpe_merges", oracle=_bpe_merges_sql())
@@ -2529,16 +2501,13 @@ def _bm25_sql() -> str:
 
 def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q122's ranked BM25 result, shared with the q157 hybrid fusion —
-    session-cached (the result is BM25_TOPK rows; in production the
+    a session table (the result is BM25_TOPK rows; in production the
     per-query retrieval runs once and every fusion/rerank stage reads
     it). The uncached pipeline stays snapshot in PLANS.md via
     tools/dump_plans.py's EXTRA_PLANS."""
-    key = _sig_cache_key(spark, sf_dir, "bm25")
-    cached = _SIG_CACHE.get(key)
-    if cached is None:
-        cached = _bm25_ranked_uncached(spark, sf_dir).localCheckpoint()
-        _SIG_CACHE[key] = cached
-    return cached
+    return session_table(spark, sf_dir, "bm25", lambda: (
+        _bm25_ranked_uncached(spark, sf_dir).localCheckpoint()
+    ))
 
 
 def _bm25_ranked_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2910,23 +2879,22 @@ def q151_simhash_neardup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_training_ops.py pins the hint-free plan.
 # ---------------------------------------------------------------------------
 def _bigram_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached ``(doc_id, _bigrams)`` frame for q148 — routes
-    bigram_surprisal's materialization through the _SIG_CACHE
-    discipline (r8 advice: the operator's internal per-invocation
+    """``(doc_id, _bigrams)`` session table for q148 — routes
+    bigram_surprisal's materialization through ``session_table``
+    (r8 advice: the operator's internal per-invocation
     localCheckpoint is untracked, so bench runs/sweeps would
-    accumulate checkpoint storage the session caches can't evict)."""
-    key = _sig_cache_key(spark, sf_dir, "bigram_base")
-    base = _SIG_CACHE.get(key)
-    if base is None:
+    accumulate checkpoint storage clear_session_caches can't evict)."""
+
+    def build() -> DataFrame:
         d = _docs(spark, sf_dir)
         toks = T.tokens(F.col("text"))
-        base = (
+        return (
             d.select(F.col("doc_id"), T.shingles(toks, 2).alias("_bigrams"))
             .where(F.size(toks) >= 2)
             .localCheckpoint(eager=False)
         )
-        _SIG_CACHE[key] = base
-    return base
+
+    return session_table(spark, sf_dir, "bigram_base", build)
 
 
 @query(
@@ -2993,20 +2961,12 @@ _WINNOW_W = 4
 
 
 def _winnow_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached winnowing selection (the stored artifact at
+    """Winnowing selection as a session table (the stored artifact at
     scale): q149's summary and q150's match join both derive from ONE
-    materialized selection instead of re-fingerprinting the corpus.
-    Same _SIG_CACHE discipline as _doc_tokens — localCheckpointed,
-    evicted by clear_session_caches(), amortization noted in the bench
-    methodology."""
-    key = _sig_cache_key(spark, sf_dir, "winnow_sel")
-    sel = _SIG_CACHE.get(key)
-    if sel is None:
-        sel = T.winnow_selection(
-            _docs(spark, sf_dir), "text", "doc_id", k=_WINNOW_K, w=_WINNOW_W
-        ).localCheckpoint(eager=False)
-        _SIG_CACHE[key] = sel
-    return sel
+    materialized selection instead of re-fingerprinting the corpus."""
+    return session_table(spark, sf_dir, "winnow_sel", lambda: T.winnow_selection(
+        _docs(spark, sf_dir), "text", "doc_id", k=_WINNOW_K, w=_WINNOW_W
+    ).localCheckpoint(eager=False))
 
 
 @query(
@@ -3415,13 +3375,11 @@ _DSIR_CTES = f"""
 
 
 def _dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached per-doc DSIR score frame shared by q155/q156 —
-    same _SIG_CACHE discipline as _winnow_sel: in a real pipeline the
-    importance scores are a persisted curation table consumed by many
-    selection jobs, not a per-query recompute."""
-    key = _sig_cache_key(spark, sf_dir, "dsir")
-    s = _SIG_CACHE.get(key)
-    if s is None:
+    """Per-doc DSIR score frame shared by q155/q156, as a session
+    table: in a real pipeline the importance scores are a persisted
+    curation table consumed by many selection jobs."""
+
+    def build() -> DataFrame:
         # share q148's materialized bigram table instead of re-exploding
         # the corpus: one (doc_id, _bigrams) checkpoint feeds both the
         # surprisal and importance scorers (bench measured the private
@@ -3432,15 +3390,15 @@ def _dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "doc_id",
         )
-        s = T.dsir_importance(
+        return T.dsir_importance(
             _docs(spark, sf_dir),
             "text",
             "doc_id",
             F.col("lang") == DSIR_TARGET_LANG,
             base=base,
         ).localCheckpoint()
-        _SIG_CACHE[key] = s
-    return s
+
+    return session_table(spark, sf_dir, "dsir", build)
 
 
 @query(
@@ -4393,17 +4351,20 @@ def q174_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schema round-trip), which is precisely the layer the in-process
 # queries can't see.
 #
-# The write is cached per (session, sf_dir) in _SIG_CACHE like every
-# other "persisted upstream table" stand-in: production writes ONCE at
-# ingest and every pass reads; re-running the query in one session
-# re-reads the same table. Table names are sf-tagged so interleaved
-# sf_dirs in one session can't cross-contaminate.
+# The write is a ``session_table``: production writes ONCE at ingest
+# and every pass reads; re-running the query in one session
+# re-reads the same table. Table and scratch names are tagged with the
+# sf_dir's basename (readable) plus a hash of its absolute path (unique),
+# so interleaved sf_dirs in one session can't cross-contaminate — two
+# directories named sf0.01 under different parents included.
 # ---------------------------------------------------------------------------
 def _sf_tag(sf_dir: str) -> str:
+    import hashlib
     import re as _re
 
-    base = os.path.basename(os.path.abspath(sf_dir).rstrip("/"))
-    return _re.sub(r"[^0-9a-zA-Z]+", "_", base).lower()
+    path = os.path.abspath(sf_dir)
+    base = _re.sub(r"[^0-9a-zA-Z]+", "_", os.path.basename(path)).lower()
+    return f"{base}_{hashlib.sha1(path.encode()).hexdigest()[:8]}"
 
 
 def _persisted_table(
@@ -4411,17 +4372,19 @@ def _persisted_table(
 ) -> str:
     """Write-once-per-(session, sf_dir) guard around a bucketed-table
     writer; returns the table name. ``write(table_name)`` runs only on
-    the first call; ensure_table_writable first clears any stale
-    location a killed previous process left in the warehouse."""
+    the first call (a session table named ``tbl_<what>``);
+    ensure_table_writable first clears any stale location a killed
+    previous process left in the warehouse."""
     from ..sources.sinks import ensure_table_writable
 
     table = f"persisted_{what}_{_sf_tag(sf_dir)}"
-    key = _sig_cache_key(spark, sf_dir, f"tbl_{what}")
-    if key not in _SIG_CACHE:
+
+    def build() -> str:
         ensure_table_writable(spark, table)
         write(table)
-        _SIG_CACHE[key] = table
-    return table
+        return table
+
+    return session_table(spark, sf_dir, f"tbl_{what}", build)
 
 
 @query("q179_persisted_lsh_candidates", oracle=_lsh_sql())

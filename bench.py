@@ -18,12 +18,12 @@ Methodology caveats (r7 advice):
   first-touch cost; ``SPARK_GRAFT_BENCH_RUNS=2`` additionally reports
   a ``steady`` block (best-of-N) tracked round-over-round, while
   ``value``/``queries`` stay FIRST-run (the driver convention).
-- A few queries share session caches (plans/training_data.py
-  ``_doc_tokens``/``_bpe_rules``: q47/q109/q114/q122/q137/q141):
-  whichever of them runs first pays the one-time tokenize/BPE-learn
-  materialization; the others measure marginal cost. Per-query deltas
-  within that group are only comparable suite-to-suite, not in
-  isolation.
+- Many queries share session tables (every caller of
+  plans/training_data.py ``session_table``, e.g. ``_doc_tokens`` for
+  q47/q109/q114/q122/q137/q141): whichever query of a group runs first
+  pays the one-time materialization; the others measure marginal
+  cost. Per-query deltas within a group are only comparable
+  suite-to-suite, not in isolation.
 """
 
 from __future__ import annotations

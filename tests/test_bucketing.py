@@ -4,6 +4,9 @@ hygiene; the 100 TB answer to repeated large-table equi-joins)."""
 import pytest
 from pyspark.sql import functions as F
 
+# importing training_data also registers the queries
+from _multi_source_retail_data_integration_hub_spark.plans.training_data import _sf_tag
+
 
 @pytest.fixture(scope="module", autouse=True)
 def _cleanup(spark):
@@ -98,7 +101,7 @@ def test_minhash_bands_bucketed_candidate_stage(spark):
     distinct — the hot-bucket count, the guard join and the
     within-bucket self-join all reuse the scan's partitioning — and
     (b) pair output byte-identical to the in-process path, so the
-    persisted table can replace the _SIG_CACHE localCheckpoint without
+    persisted table can replace the _mutated_sig session table without
     touching any oracle."""
     from _multi_source_retail_data_integration_hub_spark.operators import text as T
 
@@ -351,7 +354,6 @@ def test_persisted_path_queries_read_bucketed_tables(spark):
     keep the Exchange budget their operator-level twins assert: one
     Exchange total on each read side (the final pair distinct resp.
     the per-doc ranking window)."""
-    import _multi_source_retail_data_integration_hub_spark.plans.training_data  # noqa: F401 — registers the queries
     from _multi_source_retail_data_integration_hub_spark.plans.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
@@ -377,10 +379,18 @@ def test_persisted_path_queries_read_bucketed_tables(spark):
             assert df.count() > 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        for t in ("persisted_bands_sf0_001", "persisted_tokens_sf0_001",
-                  "persisted_winnow_sf0_001", "persisted_shbands_sf0_001",
-                  "persisted_ivf_sf0_001"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        for what in ("bands", "tokens", "winnow", "shbands", "ivf"):
+            spark.sql(f"DROP TABLE IF EXISTS persisted_{what}_{_sf_tag(sf)}")
+
+
+def test_sf_tag_separates_same_named_directories(tmp_path):
+    """Two sf_dirs with one basename (a test corpus and a benchmark
+    copy, both sf0.01) must not share persisted_* table or streaming
+    scratch names; two spellings of one directory must."""
+    a, b = (str(tmp_path / parent / "sf0.01") for parent in "ab")
+    assert _sf_tag(a) != _sf_tag(b)
+    assert _sf_tag(a) == _sf_tag(a + "/")
+    assert _sf_tag(a).startswith("sf0_01_") and _sf_tag(a).isidentifier()
 
 
 def test_ensure_table_writable_clears_stale_location(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Session caches must be value-invisible (r9 verdict ask #5): the
-_SIG_CACHE layer models persisted upstream tables, so a query must
+"""Session tables must be value-invisible (r9 verdict ask #5):
+``session_table`` models persisted upstream tables, so a query must
 return byte-identical rows whether its shared stage is built cold or
 read warm — and must rebuild correctly after eviction, including the
 semdedup entry whose cached tuple carries a SparkContext Broadcast

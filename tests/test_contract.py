@@ -157,6 +157,24 @@ def test_broadcast_hints_only_on_bounded_relations():
     )
 
 
+def test_session_table_storage_stays_in_one_module():
+    """How session tables are keyed and stored is decided in
+    plans/training_data.py alone: every other package module goes
+    through ``session_table`` and never names the store or its key."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / (
+        "_multi_source_retail_data_integration_hub_spark"
+    )
+    offenders = sorted(
+        str(py.relative_to(pkg))
+        for py in pkg.rglob("*.py")
+        if py != pkg / "plans" / "training_data.py"
+        and re.search(r"_SIG_CACHE|_sig_cache_key", py.read_text())
+    )
+    assert not offenders, f"use training_data.session_table instead: {offenders}"
+
+
 def test_fingerprint_tail_is_byte_identical_to_head():
     """q997's oracle must be the SAME SQL as q000's and its Spark side
     must delegate to q000 — the bracket only works if the two ends of

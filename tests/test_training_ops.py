@@ -676,10 +676,12 @@ def test_decile_cutpoints_skewed_bin_skips_deciles(spark, tmp_path):
 
 
 def test_clear_session_caches_evicts_and_rematerializes(spark):
-    """plans/training_data.py::clear_session_caches — the session
-    caches must release cleanly and rebuild lazily with identical
-    results (r7 advice: bounded cache lifetime for long-lived
-    drivers)."""
+    """plans/training_data.py::session_table / clear_session_caches —
+    one build per (session, sf_dir, name); the tables must release
+    cleanly and rebuild lazily with identical results (r7 advice:
+    bounded cache lifetime for long-lived drivers)."""
+    import itertools
+
     from _multi_source_retail_data_integration_hub_spark.plans import (
         training_data as td,
     )
@@ -692,6 +694,18 @@ def test_clear_session_caches_evicts_and_rematerializes(spark):
     assert not td._SIG_CACHE
     after = td._doc_tokens(spark, sf_dir).count()
     assert after == before
+
+    build = itertools.count(1).__next__  # the n-th build returns n
+    # repeats and a trailing-slash spelling of the directory are hits
+    for d in (sf_dir, sf_dir, sf_dir + "/"):
+        assert td.session_table(spark, d, "probe", build) == 1
+    assert td.session_table(spark, sf_dir, "probe_b", build) == 2
+    with pytest.raises(ZeroDivisionError):  # a failing build stores nothing
+        td.session_table(spark, sf_dir, "probe_c", lambda: 1 // 0)
+    assert td.session_table(spark, sf_dir, "probe_c", build) == 3
+    td.clear_session_caches()
+    assert td.session_table(spark, sf_dir, "probe", build) == 4
+    td.clear_session_caches()
 
 
 # ---------------------------------------------------------------------------
