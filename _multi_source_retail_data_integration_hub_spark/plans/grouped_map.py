@@ -1,17 +1,17 @@
-"""Grouped-map (applyInPandas) and explicit window-frame surfaces.
+"""Explicit window-frame surfaces: per-user gaps, moving averages and
+purchase→error attribution, all as JVM-native plans.
 
-q39: per-user inter-event gap statistics. The registered query is a
-fully JVM-side plan — LAG window for the gaps, then a grouped
-min/max/count/percentile(0.5) — no Python in the hot path (Spark's
-exact percentile interpolation is bit-identical to DuckDB MEDIAN and
-numpy, verified empirically). ``user_gap_stats_grouped_map`` keeps the
-equivalent applyInPandas construction as the grouped-map UDF exercise
-(pandas DataFrame in, DataFrame out, one group per call);
-tests/test_functions.py proves the two agree row-for-row.
+q39: per-user inter-event gap statistics — LAG window for the gaps,
+then a grouped min/max/count/percentile(0.5). Spark's exact percentile
+interpolation is bit-identical to DuckDB MEDIAN, so no Python runs in
+the plan (SURVEY §2.11: native Column expressions only).
 
 q40: 7-row trailing moving average over daily revenue with an explicit
 ROWS BETWEEN frame — the frame-spec window class the reference never
 uses (SURVEY §2.6) but any trend dashboard wants.
+
+q61: purchase→error attribution with a range-frame window instead of
+a range join (see the comment block above the query).
 
 Scale notes: q39 shuffles once on user_id (the window partition key
 and the grouping key — one Exchange reused for both); q40's window
@@ -20,10 +20,6 @@ runs on the tiny post-aggregate daily table.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -34,7 +30,7 @@ DEC = "decimal(18,2)"
 
 
 # ---------------------------------------------------------------------------
-# q39 — per-user gap statistics (applyInPandas grouped map)
+# q39 — per-user gap statistics (LAG window + grouped aggregate)
 # ---------------------------------------------------------------------------
 @query(
     "q39_user_gap_stats",
@@ -74,63 +70,6 @@ def q39_user_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def weighted_avg_grouped_agg(df: DataFrame, group_col: str, val_col: str, w_col: str) -> DataFrame:
-    """GROUPED_AGG pandas UDAF exercise: weight-averaged value per group.
-
-    The UDAF class (pandas Series in, scalar out, usable in groupBy.agg
-    and over windows) — kept as the API reference; production plans use
-    the JVM twin ``sum(v*w)/sum(w)`` (two codegen'd aggregates, partial
-    map-side combine), which tests/test_functions.py proves equal.
-    """
-    import pandas as pd  # noqa: PLC0415  (workers pickle this closure)
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    @pandas_udf("double")
-    def wavg(v: pd.Series, w: pd.Series) -> float:
-        denom = w.sum()
-        return float((v * w).sum() / denom) if denom else float("nan")
-
-    return df.groupBy(group_col).agg(
-        wavg(F.col(val_col), F.col(w_col)).alias("weighted_avg")
-    )
-
-
-def user_gap_stats_grouped_map(events: DataFrame) -> DataFrame:
-    """applyInPandas twin of q39 (grouped-map UDF exercise).
-
-    ``events`` needs columns (user_id, event_id, ts_us). Semantics match
-    the native plan exactly, including dropping single-event users (no
-    gaps => no output row, the HAVING-equivalent the SQL's WHERE
-    expresses). Kept as the grouped-map reference implementation; the
-    registered q39 is the JVM-native plan (~2x faster, no per-group
-    pandas allocation).
-    """
-    out_schema = (
-        "user_id long, n_gaps long, min_gap_secs double, "
-        "median_gap_secs double, max_gap_secs double"
-    )
-
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts_us", "event_id"], kind="mergesort")
-        gaps = np.diff(pdf["ts_us"].to_numpy()) / 1_000_000.0
-        if len(gaps) == 0:
-            return pd.DataFrame(
-                {"user_id": [], "n_gaps": [], "min_gap_secs": [],
-                 "median_gap_secs": [], "max_gap_secs": []}
-            )
-        return pd.DataFrame(
-            {
-                "user_id": [int(pdf["user_id"].iloc[0])],
-                "n_gaps": [len(gaps)],
-                "min_gap_secs": [float(np.min(gaps))],
-                "median_gap_secs": [float(np.median(gaps))],
-                "max_gap_secs": [float(np.max(gaps))],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandas(stats, out_schema)
-
-
 # ---------------------------------------------------------------------------
 # q40 — trailing 7-row moving average with explicit ROWS BETWEEN frame
 # ---------------------------------------------------------------------------
@@ -168,16 +107,13 @@ def q40_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q61 — purchase→error attribution. The REGISTERED plan is fully
-# JVM-native: one shuffle on user_id feeds (a) a range-frame window that
-# finds the latest purchase strictly before each error and (b) the
-# per-user type counts; a hit is an error whose nearest preceding
-# purchase is within the window (if the nearest is too far, every
-# earlier one is farther — so the single running max suffices, no e⋈p
-# range join, no quadratic blow-up). ``cogroup_timelines_grouped`` keeps
-# the cogroup().applyInPandas construction as the cogrouped-map API
-# exercise; tests/test_functions.py proves the two agree row-for-row
-# (same treatment as q39's grouped-map twin).
+# q61 — purchase→error attribution. The plan is fully JVM-native: one
+# shuffle on user_id feeds (a) a range-frame window that finds the
+# latest purchase strictly before each error and (b) the per-user type
+# counts; a hit is an error whose nearest preceding purchase is within
+# the window (if the nearest is too far, every earlier one is farther —
+# so the single running max suffices, no e⋈p range join, no quadratic
+# blow-up). The oracle checks it against DuckDB's explicit range join.
 # ---------------------------------------------------------------------------
 ERR_WINDOW_US = 3600 * 1_000_000  # errors within 1 h after a purchase
 
@@ -252,65 +188,3 @@ def q61_cogroup_timelines(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_errors_after_purchase"
         ),
     )
-
-
-def cogroup_timelines_grouped(purchases: DataFrame, errors: DataFrame) -> DataFrame:
-    """cogroup().applyInPandas twin of q61 (cogrouped-map API exercise).
-
-    ``purchases`` / ``errors`` need columns (user_id, ts_us). One pandas
-    call per user aligns the two timelines with numpy searchsorted.
-    Kept as the cogrouped-map reference implementation; the registered
-    q61 is the JVM-native window plan (no Python in the hot path).
-    tests/test_functions.py proves the pair agree row-for-row.
-    """
-    out_schema = (
-        "user_id long, n_purchases long, n_errors long, "
-        "n_errors_after_purchase long"
-    )
-
-    def compare(key, p_pdf: pd.DataFrame, e_pdf: pd.DataFrame) -> pd.DataFrame:
-        p = np.sort(p_pdf["ts_us"].to_numpy(dtype=np.int64))
-        e = np.unique(e_pdf["ts_us"].to_numpy(dtype=np.int64))
-        if len(p) and len(e):
-            # an error counts if ANY purchase precedes it within the window;
-            # searchsorted finds the nearest purchase strictly before each error
-            idx = np.searchsorted(p, e, side="left") - 1
-            ok = idx >= 0
-            hits = int(np.count_nonzero(ok & (e - p[np.clip(idx, 0, None)] <= ERR_WINDOW_US)))
-        else:
-            hits = 0
-        return pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_purchases": [len(p)],
-                "n_errors": [len(e_pdf)],
-                "n_errors_after_purchase": [hits],
-            }
-        )
-
-    return purchases.groupBy("user_id").cogroup(errors.groupBy("user_id")).applyInPandas(
-        compare, out_schema
-    )
-
-
-def word_positions_udtf():
-    """Python UDTF exercise (Spark 4 API class: one input row -> many
-    typed output rows, usable from both DataFrame code and
-    ``spark.sql`` after ``spark.udtf.register``). Completes the Python
-    API matrix alongside scalar pandas UDF / grouped map / cogrouped
-    map / grouped agg / map_in_pandas / stateful.
-
-    NOT a hot-path operator: tokenization stays on the JVM everywhere
-    it matters (operators/text.py's posexplode+split plan) — the test
-    proves this UDTF is row-for-row equivalent to that native plan,
-    the same treatment as the other API exercises in this module.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="word: string, pos: int")
-    class WordPositions:
-        def eval(self, text: str):
-            for i, w in enumerate((text or "").split()):
-                yield w, i
-
-    return WordPositions

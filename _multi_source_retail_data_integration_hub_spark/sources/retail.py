@@ -2,15 +2,12 @@
 
 - CSV scan with explicit schema + lineage columns (S1).
 - Product-catalog JSON with the nested ``rating`` struct flattened at
-  read (S2) — from a local JSON file or an in-memory record list; the
-  live REST fetch is a thin optional wrapper (network access is an
-  environment concern, not an engine one).
+  read (S2) — from a local JSON file or an in-memory record list (the
+  caller owns the HTTP leg; the engine needs no network access).
 - Scalar category list (S3).
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,15 +68,6 @@ def categories_from_list(spark: SparkSession, categories: list[str]) -> DataFram
     """Scalar category list -> single-column DataFrame (S3,
     etl/extract.py:103-123)."""
     return spark.createDataFrame([(c,) for c in categories], "category string")
-
-
-def fetch_products_rest(spark: SparkSession, url: str, timeout: int = 30, extracted_at=None) -> DataFrame:
-    """Live REST fetch (S2's HTTP leg). Optional: requires network."""
-    import urllib.request
-
-    with urllib.request.urlopen(url, timeout=timeout) as resp:  # noqa: S310
-        records = json.loads(resp.read().decode())
-    return products_from_records(spark, records, extracted_at)
 
 
 def with_file_lineage(df: DataFrame) -> DataFrame:

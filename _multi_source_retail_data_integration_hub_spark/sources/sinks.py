@@ -81,13 +81,6 @@ def write_warehouse_table(
     writer.saveAsTable(full_name)
 
 
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: tuple[str, ...] = ()
-) -> None:
-    """File-based variant of S5 for catalogless deployments."""
-    write_files(df, path, "parquet", mode, partition_by)
-
-
 def ensure_table_writable(spark: SparkSession, table: str) -> None:
     """Make ``saveAsTable(table)`` safe to (re-)create: drop any
     catalog entry AND any stale managed location left in the

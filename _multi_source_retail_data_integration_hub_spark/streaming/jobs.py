@@ -735,45 +735,3 @@ def foreach_batch_mart_merge(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running totals as ``running_user_totals``, on
-    the Spark-4 ``transformWithStateInPandas`` API (the successor of
-    applyInPandasWithState): typed named state handles (ValueState /
-    ListState / MapState), explicit timers, and an initial-state hook —
-    one processor can hold several independent state variables where
-    the v1 API packs everything into a single tuple schema.
-
-    Requires the RocksDB state store provider (bundled with Spark);
-    callers set ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...state.RocksDBStateStoreProvider`` before starting the query —
-    at scale that is also the right provider anyway (state spills to
-    disk instead of living on the executor heap).
-    """
-    import pandas as pd  # local import: workers pickle this closure
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState("totals", "n long, v double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, v = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-            self._totals.update((n, v))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [v]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        "user_id long, n_events long, total_value double",
-        "update",
-        "none",
-    )

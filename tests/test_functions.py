@@ -109,80 +109,6 @@ def test_normalize_column_names(spark):
     assert normalize_column_names(df).columns == ["transaction_id", "price_per_unit", "age"]
 
 
-def test_grouped_map_gap_stats_matches_native_plan(spark):
-    """applyInPandas twin of q39 agrees with the native window+agg plan,
-    including dropping single-event users (no gaps -> no row)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from _multi_source_retail_data_integration_hub_spark.plans.grouped_map import (
-        user_gap_stats_grouped_map,
-    )
-
-    rows = [
-        (1, 1, 1_000_000),
-        (1, 2, 4_500_000),
-        (1, 3, 9_000_000),
-        (2, 4, 1_000_000),  # single event: must produce NO output row
-        (3, 5, 0),
-        (3, 6, 123_456_789),
-    ]
-    events = spark.createDataFrame(rows, "user_id long, event_id long, ts_us long")
-    gm = {r["user_id"]: r for r in user_gap_stats_grouped_map(events).collect()}
-
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gaps = events.select(
-        "user_id",
-        ((F.col("ts_us") - F.lag("ts_us").over(w)) / 1_000_000.0).alias("gap_secs"),
-    ).where(F.col("gap_secs").isNotNull())
-    native = {
-        r["user_id"]: r
-        for r in gaps.groupBy("user_id")
-        .agg(
-            F.count("gap_secs").alias("n_gaps"),
-            F.min("gap_secs").alias("min_gap_secs"),
-            F.percentile("gap_secs", F.lit(0.5)).alias("median_gap_secs"),
-            F.max("gap_secs").alias("max_gap_secs"),
-        )
-        .collect()
-    }
-    assert set(gm) == set(native) == {1, 3}
-    for uid in gm:
-        assert gm[uid].asDict() == native[uid].asDict()
-
-
-def test_cogroup_timelines_matches_native_plan(spark):
-    """cogroup().applyInPandas twin of q61 agrees with the registered
-    JVM-native window plan on real testdata, including the
-    strictly-before tie rule and distinct-error-instant hit counting."""
-    from pyspark.sql import functions as F
-
-    from _multi_source_retail_data_integration_hub_spark.plans.grouped_map import (
-        cogroup_timelines_grouped,
-        q61_cogroup_timelines,
-    )
-    from _multi_source_retail_data_integration_hub_spark.sources.testdata import (
-        load_table,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    native = {r["user_id"]: r.asDict() for r in q61_cogroup_timelines(spark, sf_dir).collect()}
-
-    events = load_table(spark, sf_dir, "events")
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        "user_id", F.unix_micros("ts").alias("ts_us")
-    )
-    errors = events.where(F.col("event_type") == "error").select(
-        "user_id", F.unix_micros("ts").alias("ts_us")
-    )
-    twin = {
-        r["user_id"]: r.asDict()
-        for r in cogroup_timelines_grouped(purchases, errors).collect()
-    }
-    assert native and set(native) == set(twin)
-    assert native == twin
-
-
 def test_age_group_out_of_bin_edges_match_pd_cut(spark):
     """pd.cut(bins=[0,25,...,100]) yields NaN for NULL, <=0, and >100 —
     not a boundary bucket."""
@@ -219,67 +145,3 @@ def test_tokens_empty_text_yields_empty_array(spark):
     df = spark.createDataFrame([("",), ("   ",), ("a b",)], "text string")
     got = [r["n"] for r in df.select(F.size(tokens("text")).alias("n")).collect()]
     assert got == [0, 0, 2]
-
-
-def test_grouped_agg_udaf_matches_jvm_twin(spark):
-    """GROUPED_AGG pandas UDAF (weighted avg) equals the JVM-native
-    sum(v*w)/sum(w) plan bit-for-bit on exact-in-double inputs."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from _multi_source_retail_data_integration_hub_spark.plans.grouped_map import (
-        weighted_avg_grouped_agg,
-    )
-
-    rows = [(i % 5, float(i % 11), float(1 + i % 3)) for i in range(200)]
-    df = spark.createDataFrame(rows, "g int, v double, w double")
-    udaf = {r.g: r.weighted_avg for r in weighted_avg_grouped_agg(df, "g", "v", "w").collect()}
-    jvm = {
-        r.g: r.weighted_avg
-        for r in df.groupBy("g")
-        .agg((F.sum(F.col("v") * F.col("w")) / F.sum("w")).alias("weighted_avg"))
-        .collect()
-    }
-    assert set(udaf) == set(jvm)
-    for g in udaf:
-        assert udaf[g] == pytest.approx(jvm[g], rel=1e-12)
-
-
-def test_word_positions_udtf_matches_native_plan(spark):
-    """The Spark-4 Python UDTF exercise is row-for-row identical to the
-    JVM posexplode(split()) plan the engine actually uses for
-    tokenization (plans/grouped_map.py::word_positions_udtf)."""
-    from _multi_source_retail_data_integration_hub_spark.plans.grouped_map import (
-        word_positions_udtf,
-    )
-
-    WordPositions = word_positions_udtf()
-    spark.udtf.register("word_positions", WordPositions)
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, ""), (3, None), (4, "one")],
-        "id long, text string",
-    )
-    docs.createOrReplaceTempView("udtf_docs")
-    got = spark.sql(
-        """
-        SELECT d.id, w.word, w.pos
-        FROM udtf_docs d, LATERAL word_positions(d.text) w
-        ORDER BY d.id, w.pos
-        """
-    ).collect()
-    want = (
-        docs.select(
-            "id",
-            F.posexplode(
-                F.when(
-                    F.length(F.trim("text")) > 0, F.split(F.trim("text"), r"\s+")
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("pos", "word"),
-        )
-        .select("id", "word", "pos")
-        .orderBy("id", "pos")
-        .collect()
-    )
-    assert [(r.id, r.word, r.pos) for r in got] == [
-        (r.id, r.word, r.pos) for r in want
-    ]

@@ -380,62 +380,6 @@ def test_streaming_mart_checkpoint_recreation_heals(spark, tmp_path):
     assert _rows(got, cols) == _rows(_event_merge(want, want), cols)
 
 
-def test_stateful_running_totals_tws(spark, events_stream):
-    """transformWithStateInPandas twin of the v1 stateful job: same
-    per-user totals, Spark-4 typed-state API, RocksDB provider.
-
-    The v2 API's Python driver worker imports google.protobuf (its
-    state-server protocol is proto-based); this container ships no
-    protobuf, so the run is environment-gated — the job itself builds
-    fine (plan construction is protobuf-free) and the v1
-    applyInPandasWithState twin above covers the semantics in-container.
-    """
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState Python worker needs protobuf (absent here)",
-    )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        jobs.run_available_now(
-            jobs.running_user_totals_tws(events_stream),
-            "t_totals_tws",
-            output_mode="update",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    got = {r.user_id: r for r in spark.table("t_totals_tws").collect()}
-    want = {
-        r.user_id: r
-        for r in load_table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for uid, w in want.items():
-        assert got[uid].n_events == w.n_events
-        assert got[uid].total_value == pytest.approx(w.total_value, rel=1e-9)
-
-
-def test_tws_plan_builds_without_protobuf(spark, events_stream):
-    """Even without protobuf the v2 job must CONSTRUCT: the analyzed
-    plan contains the transformWithState operator and the declared
-    output schema (runtime is env-gated, construction is not)."""
-    df = jobs.running_user_totals_tws(events_stream)
-    assert df.schema.simpleString() == (
-        "struct<user_id:bigint,n_events:bigint,total_value:double>"
-    )
-    assert "transformWithState" in df._jdf.queryExecution().analyzed().toString()
-
-
 def test_apply_mart_batch_promotes_orphaned_staging(spark):
     """Crash between DROP and RENAME: the live mart is missing and the
     fully-merged staging table (stamped with its batch id) exists. The

@@ -213,7 +213,7 @@ def main() -> None:
             " --build-only"
         )
     spark = get_spark("persisted_rehearsal")
-    heap = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    heap = spark.conf.get("spark.driver.memory")
     print(f"corpus {sf}, heap {heap}", flush=True)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
     try:

@@ -244,7 +244,7 @@ ALLOW: dict[tuple[str, str], str] = {
     ),
     ("q40_moving_avg", "1PART"): (
         "7-day moving average over the daily aggregate (#days rows; "
-        "comment at plans/grouped_map.py:160)"
+        "comment in plans/grouped_map.py::q40_moving_avg)"
     ),
     ("q106_mixture_sample", "1PART"): (
         "mixture-rate waterfill window over per-language totals "
