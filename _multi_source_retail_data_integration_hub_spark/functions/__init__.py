@@ -6,7 +6,6 @@ from .derived import (
     date_key,
     fiscal_quarter,
     fiscal_year,
-    month_period,
     row_hash,
 )
 
@@ -18,7 +17,6 @@ __all__ = [
     "date_key",
     "fiscal_quarter",
     "fiscal_year",
-    "month_period",
     "normalize_column_names",
     "pandas_title",
     "row_hash",

@@ -34,11 +34,6 @@ def date_key(col: Column | str) -> Column:
     return F.date_format(col, "yyyyMMdd").cast("int")
 
 
-def month_period(col: Column | str) -> Column:
-    """pandas ``dt.to_period('M').astype(str)`` -> ``'2023-01'`` (D13)."""
-    return F.date_format(col, "yyyy-MM")
-
-
 def day_of_week_mon0(col: Column | str) -> Column:
     """Monday=0..Sunday=6 day-of-week (pandas ``dt.dayofweek``, D3).
 

@@ -24,15 +24,10 @@ from ..operators.quantiles import (
     histogram_bucket_map,
 )
 from ..sources.testdata import load_table
-from .registry import query
+from .registry import dsum, query
 
-# Money aggregation helpers (keep Spark + oracle in lockstep).
+# Money aggregation type (keep Spark + oracle in lockstep; see dsum).
 DEC = "decimal(18,2)"
-
-
-def _dsum(col):
-    """Exact, order-independent money sum -> double."""
-    return F.sum(F.col(col).cast(DEC)).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +63,7 @@ def q01_monthly_sales_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("long").alias("year"),
         F.month("o_orderdate").cast("long").alias("month"),
     ).agg(
-        _dsum("o_totalprice").alias("total_revenue"),
+        dsum("o_totalprice").alias("total_revenue"),
         F.countDistinct("o_orderkey").alias("total_orders"),
         F.countDistinct("o_custkey").alias("unique_customers"),
     )
@@ -308,8 +303,8 @@ def q05_weekday_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_orders"),
-            _dsum("o_totalprice").alias("total_revenue"),
-            (_dsum("o_totalprice") / F.nullif(F.count("*"), F.lit(0))).alias(
+            dsum("o_totalprice").alias("total_revenue"),
+            (dsum("o_totalprice") / F.nullif(F.count("*"), F.lit(0))).alias(
                 "avg_order_value"
             ),
         )
@@ -409,7 +404,7 @@ def q07_catalog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_products"),
             F.countDistinct("p_type").alias("n_types"),
-            (_dsum("p_retailprice") / F.nullif(F.count("*"), F.lit(0))).alias("avg_price"),
+            (dsum("p_retailprice") / F.nullif(F.count("*"), F.lit(0))).alias("avg_price"),
             F.min("p_retailprice").alias("min_price"),
             F.max("p_retailprice").alias("max_price"),
             (F.sum("p_size").cast("double") / F.nullif(F.count("*"), F.lit(0))).alias(
@@ -451,7 +446,7 @@ def q08_quarterly_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("long").alias("year"),
         F.quarter("o_orderdate").cast("long").alias("quarter"),
     ).agg(
-        _dsum("o_totalprice").alias("total_revenue"),
+        dsum("o_totalprice").alias("total_revenue"),
         F.count("*").alias("n_orders"),
     )
     w = Window.orderBy("year", "quarter")
@@ -794,7 +789,7 @@ def q64_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             F.count("*").alias("n_orders"),
-            _dsum("o_totalprice").alias("total_revenue"),
+            dsum("o_totalprice").alias("total_revenue"),
         )
         .orderBy("region", "nation")
     )

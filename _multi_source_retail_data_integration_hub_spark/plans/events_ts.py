@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import query
+from .registry import dsum, query
 
 SESSION_GAP_US = 12 * 3600 * 1_000_000  # 12 hours of inactivity ends a session
 
@@ -29,10 +29,6 @@ import itertools as _itertools  # noqa: E402
 _VIEW_SEQ = _itertools.count()
 
 DEC = "decimal(18,2)"
-
-
-def _dsum(col: str):
-    return F.sum(F.col(col).cast(DEC)).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +53,7 @@ def q29_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
-            _dsum("value").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -133,7 +129,7 @@ def q30_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("session_start"),
         F.count("*").alias("n_events"),
         (F.max("ts_us") - F.min("ts_us")).alias("duration_us"),
-        _dsum("value").alias("total_value"),
+        dsum("value").alias("total_value"),
     )
 
 
@@ -161,7 +157,7 @@ def q31_sliding_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.window("ts", "7 days", "1 day").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            _dsum("value").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -843,32 +839,19 @@ def _drain_memory_sink(agg: DataFrame, label: str) -> DataFrame:
     complete mode) and return a BATCH snapshot of the result.
 
     Shared by q126/q136 so the hygiene-critical invariants live once:
-    the query is stopped even when awaitTermination times out, the
-    bounded snapshot is collected BEFORE the temp view drops, and the
+    the bounded snapshot is collected BEFORE the temp view drops, and the
     view is dropped even when the drain/collect fails (a failed call
     must not leak a memory-sink view holding the aggregate — r5 review
     finding). Callers must guarantee the aggregate is BOUNDED (a few
     rows per group key), which is what makes the snapshot-collect
     driver-safe at any corpus size.
     """
+    from ..streaming.jobs import run_available_now
+
     spark = agg.sparkSession
     name = f"{label}_mem_{next(_VIEW_SEQ)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError(
-                    f"{label}: streaming drain did not finish in 300s"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
+        run_available_now(agg, name)
         snap = spark.table(name)
         rows = snap.collect()  # bounded by the caller's contract
         return spark.createDataFrame(rows, snap.schema)

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -38,3 +39,8 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+def dsum(col: str) -> Column:
+    """Exact, order-independent money sum -> double (the convention above)."""
+    return F.sum(F.col(col).cast("decimal(18,2)")).cast("double")

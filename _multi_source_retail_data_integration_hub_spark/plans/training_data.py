@@ -4440,22 +4440,6 @@ def _landing_stream(spark: SparkSession, sf_dir: str, scratch_name: str):
     return stream, scratch
 
 
-def _drain_ingest(q, label: str) -> None:
-    """Await an ingest stream's availableNow drain. The timeout is a
-    local-harness hang guard, not a correctness bound: 300s covers
-    every driver SF with 10x headroom; the scale rehearsals
-    (tools/scale_rehearsal.py, x64+ corpora) raise it via env."""
-    timeout_s = int(os.environ.get("SPARK_GRAFT_INGEST_TIMEOUT_S", "300"))
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"{label}: streaming ingest did not finish in {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-
-
 def _stream_ingest_bands(spark: SparkSession, sf_dir: str, table: str) -> None:
     """Build the persisted band table via STREAMING ingest:
     ``streaming/jobs.py::foreach_batch_band_append`` signs + appends
@@ -4463,10 +4447,9 @@ def _stream_ingest_bands(spark: SparkSession, sf_dir: str, table: str) -> None:
     from ..streaming import jobs
 
     stream, scratch = _landing_stream(spark, sf_dir, "stream_ingest")
-    q = jobs.foreach_batch_band_append(
+    jobs.foreach_batch_band_append(
         stream, table, checkpoint_dir=os.path.join(scratch, "cp")
     )
-    _drain_ingest(q, "q185")
 
 
 @query("q185_streaming_band_ingest", oracle=_lsh_sql())
@@ -4503,13 +4486,12 @@ def _stream_dedup_on_arrival(spark: SparkSession, sf_dir: str, pairs_table: str)
     bands_table = f"persisted_arrival_bands_{_sf_tag(sf_dir)}"
     ensure_table_writable(spark, bands_table)
     stream, scratch = _landing_stream(spark, sf_dir, "stream_arrival")
-    q = jobs.foreach_batch_dedup_on_arrival(
+    jobs.foreach_batch_dedup_on_arrival(
         stream,
         bands_table,
         pairs_table,
         checkpoint_dir=os.path.join(scratch, "cp"),
     )
-    _drain_ingest(q, "q186")
 
 
 @query("q186_streaming_dedup_on_arrival", oracle=_lsh_sql())

@@ -1,3 +1,3 @@
-from .testdata import TESTDATA_TABLES, load_table, load_tables, register_views
+from .testdata import TESTDATA_TABLES, load_table, register_views
 
-__all__ = ["TESTDATA_TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TESTDATA_TABLES", "load_table", "register_views"]

@@ -126,7 +126,8 @@ def read_documents_jsonl_stream(
     exactly like the batch path, so one cleansing contract serves
     both. ``max_files_per_trigger`` bounds per-microbatch work (at
     100 TB the landing rate, not the backlog, should size a batch);
-    drain a bounded backlog with trigger(availableNow=True).
+    drain a bounded backlog with ``streaming/jobs.py::drain`` (or its
+    memory-sink form ``run_available_now``).
     """
     reader = (
         spark.readStream.schema(_with_corrupt(schema))

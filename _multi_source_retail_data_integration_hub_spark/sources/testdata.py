@@ -114,9 +114,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# backward-compat alias (pre-round-3 name, nanos-only semantics)
-events_ts_from_nanos = normalize_events_ts
-
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -180,10 +177,6 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     except Exception:  # noqa: BLE001 — fall back to the unconditional shuffle
         pass
     return df.repartition(n)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -9,9 +9,11 @@ instead of recomputing them nightly.
 
 Each job is (stream_df) -> stream_df so callers choose source + sink;
 ``read_events_stream`` wires the testdata parquet as a file-stream
-source and ``run_available_now`` drains it to an in-memory table for
-tests / local verification (trigger=availableNow processes the full
-backlog then stops — the streaming plan, batch-equivalent results).
+source. Every stream runs through ``drain`` (trigger=availableNow
+processes the full backlog then stops — the streaming plan,
+batch-equivalent results): ``run_available_now`` into an in-memory
+table, and each production sink to completion, returning the stopped
+query. Table-rewriting sinks commit through ``_swap_in``.
 
 Batch equivalence: tumbling/sliding windows match q29/q31 exactly.
 Sessionization uses ``session_window`` whose gap boundary is
@@ -23,10 +25,12 @@ improbable on real timestamps; documented deviation).
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     StructField,
     StructType,
@@ -34,13 +38,16 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..plans.registry import dsum
 from ..sources.testdata import (
     EVENTS_NANOS_SCHEMA,
     events_parquet_ts_unit,
     normalize_events_ts,
 )
 
-DEC = "decimal(18,2)"
+#: hang guard for every drain, not a correctness bound: 300 s covers
+#: every driver SF with 10x headroom
+DRAIN_TIMEOUT_S = 300
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,10 +96,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def _dsum(col: str):
-    return F.sum(F.col(col).cast(DEC)).cast("double")
-
-
 def tumbling_daily(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     """Streaming twin of q29_tumbling_daily (plans/events_ts.py)."""
     return (
@@ -101,7 +104,7 @@ def tumbling_daily(events: DataFrame, watermark: str = "1 day") -> DataFrame:
         .agg(
             F.count("*").alias("n_events"),
             F.approx_count_distinct("user_id").alias("n_users_approx"),
-            _dsum("value").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -118,7 +121,7 @@ def sliding_weekly(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "7 days", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), _dsum("value").alias("total_value"))
+        .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -139,7 +142,7 @@ def sessionized(events: DataFrame, gap: str = "12 hours", watermark: str = "1 da
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            _dsum("value").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").alias("session_start"),
@@ -238,29 +241,66 @@ def purchase_error_join(
     ).select(F.col("p_user").alias("user_id"), "p_ts", "err_ts")
 
 
+def drain(writer: DataStreamWriter, label: str, checkpoint: str | None = None) -> StreamingQuery:
+    """Run ``writer`` with trigger=availableNow (checkpointed at
+    ``checkpoint`` when given) until the backlog is processed and
+    return the stopped query; its ``recentProgress`` stays readable.
+    Past ``DRAIN_TIMEOUT_S`` the sink is PARTIAL, so raise rather than
+    let callers read half a batch; the query is stopped either way."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"{label}: availableNow drain did not finish in {DRAIN_TIMEOUT_S}s"
+            )
+    finally:
+        q.stop()
+    return q
+
+
 def run_available_now(
-    stream_df: DataFrame, table_name: str, output_mode: str = "complete", timeout: int = 300
-) -> None:
+    stream_df: DataFrame, table_name: str, output_mode: str = "complete"
+) -> StreamingQuery:
     """Drain the full backlog into an in-memory table, then stop.
 
     ``complete`` mode emits every window (including still-open ones) so
     results are directly comparable to the batch twins; production
     sinks would use append mode + checkpointLocation instead.
     """
-    q = (
+    return drain(
         stream_df.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        table_name,
     )
-    if not q.awaitTermination(timeout):
-        # a timed-out drain means the memory table is PARTIAL — stop the
-        # query and fail loudly rather than let callers read half a batch
-        q.stop()
-        raise TimeoutError(
-            f"availableNow drain into {table_name!r} exceeded {timeout}s"
-        )
+
+
+def _promote_orphaned_staging(spark: SparkSession, table: str) -> None:
+    """Crashed between ``_swap_in``'s drop and rename: the staging
+    table IS the last committed snapshot — promote it first."""
+    staging = f"{table}__staging"
+    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
+        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+
+
+def _swap_in(spark: SparkSession, table: str, df: DataFrame, props: dict | None = None) -> None:
+    """Stage-then-swap commit of ``df`` (plus table properties
+    ``props``, which the rename carries) as ``table``: the live table
+    is replaced only AFTER the new snapshot is fully durable, so no
+    crash point leaves less data than before."""
+    staging = f"{table}__staging"
+    df.write.mode("overwrite").saveAsTable(staging)
+    if props:
+        pairs = ", ".join(f"'{k}'={_sql_str(v)}" for k, v in props.items())
+        spark.sql(f"ALTER TABLE {staging} SET TBLPROPERTIES ({pairs})")
+    if spark.catalog.tableExists(table):
+        spark.sql(f"DROP TABLE {table}")
+    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+    # invalidate cached file listings so readers (and the next
+    # micro-batch's own read of the table) see the new snapshot
+    spark.catalog.refreshTable(table)
 
 
 def foreach_batch_upsert(
@@ -269,17 +309,15 @@ def foreach_batch_upsert(
     key_cols: list[str],
     checkpoint_dir: str,
     order_col: str | None = None,
-) -> "object":
+) -> StreamingQuery:
     """Production merge sink: upsert each micro-batch into a warehouse
-    table keyed on ``key_cols`` via ``foreachBatch``.
+    table keyed on ``key_cols`` via ``foreachBatch``; drains the stream
+    and returns the stopped query.
 
     Without a transactional table format in this container the merge is
-    expressed as current ⟕anti batch → union, written to a STAGING
-    table and swapped in via drop+rename — a crash mid-write leaves the
-    live table untouched, and a crash inside the swap window leaves the
-    fully-merged staging table on disk for recovery (never a truncated
-    live table that a checkpoint replay would then merge against). On a
-    cluster the same foreachBatch body becomes a single atomic
+    expressed as current ⟕anti batch → union, committed by ``_swap_in``
+    (never a truncated live table that a checkpoint replay would then
+    merge against). On a cluster the same foreachBatch body becomes a single atomic
     ``MERGE INTO`` against Delta/Iceberg. The checkpoint makes
     redelivery safe: a re-run batch re-executes the same merge — which
     is only idempotent if the merge itself is deterministic, so
@@ -315,59 +353,40 @@ def foreach_batch_upsert(
         else:
             batch = batch_df.dropDuplicates(key_cols)
         batch = batch.localCheckpoint()
-        staging = f"{table}__staging"
-        if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
-            # crashed between drop and rename last run: the staging
-            # table IS the fully-merged snapshot — promote it first
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+        _promote_orphaned_staging(spark, table)
         if spark.catalog.tableExists(table):
             current = spark.table(table)
             keep = current.join(batch.select(*key_cols), key_cols, "left_anti")
             merged = keep.unionByName(batch)
         else:
             merged = batch
-        # stage-then-swap: the live table is replaced only AFTER the
-        # merged snapshot is fully durable, so no crash point leaves
-        # less data than before the batch (a crash between drop and
-        # rename is healed by the promote-staging check above on the
-        # checkpoint replay)
-        merged.write.mode("overwrite").saveAsTable(staging)
-        if spark.catalog.tableExists(table):
-            spark.sql(f"DROP TABLE {table}")
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        # invalidate cached file listings so readers (and the next
-        # micro-batch's own read of `current`) see the new snapshot
-        spark.catalog.refreshTable(table)
+        _swap_in(spark, table, merged)
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
+    return drain(
+        stream_df.writeStream.foreachBatch(_merge).outputMode("update"),
+        f"upsert into {table}",
         # namespaced per target table: two sinks sharing a checkpoint
         # root must not resume each other's offsets (the second would
         # see the backlog "already processed" and write nothing)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, f"cp_upsert_{table}"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        checkpoint=os.path.join(checkpoint_dir, f"cp_upsert_{table}"),
     )
 
 
 def write_stream_parquet(
     stream_df: DataFrame, path: str, checkpoint_dir: str, partition_by: tuple[str, ...] = ()
-) -> "object":
+) -> StreamingQuery:
     """Production-shaped sink: append-mode partitioned parquet with
-    exactly-once checkpointing. Returns the StreamingQuery handle."""
-    cp_name = "cp_" + os.path.basename(os.path.normpath(path))
-    writer = (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        # namespaced per output path (see foreach_batch_upsert)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, cp_name))
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
+    exactly-once checkpointing. Drains the stream and returns the
+    stopped query."""
+    # namespaced per output path (see foreach_batch_upsert); the path
+    # hash keeps .../a/out and .../b/out from sharing offsets
+    full = os.path.abspath(path)
+    tag = hashlib.sha1(full.encode()).hexdigest()[:8]
+    cp_name = f"cp_{os.path.basename(full)}_{tag}"
+    writer = stream_df.writeStream.format("parquet").option("path", path).outputMode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    return writer.start()
+    return drain(writer, f"parquet sink {path}", checkpoint=os.path.join(checkpoint_dir, cp_name))
 
 
 def foreach_batch_band_append(
@@ -377,7 +396,7 @@ def foreach_batch_band_append(
     id_col: str = "id",
     n_bands: int = 4,
     n_buckets: int = 64,
-) -> "object":
+) -> StreamingQuery:
     """Continuous-ingest sink for the persisted LSH band table: each
     micro-batch of ``(id, text)`` documents is MinHash-signed and its
     melted band rows APPENDED to the bucketed history table
@@ -394,7 +413,8 @@ def foreach_batch_band_append(
     join re-distincts pairs, so duplicate (id, band_id, bucket) rows
     inflate bucket sizes against the hot-bucket cap but never the pair
     set — exactly-once sinks on a cluster would land each batch as a
-    transactional append instead. Returns the StreamingQuery handle.
+    transactional append instead. Drains the stream and returns the
+    stopped query.
     """
     from ..operators import text as T  # noqa: PLC0415 — avoid module cycle
 
@@ -408,14 +428,11 @@ def foreach_batch_band_append(
             mode="append",
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_append)
+    return drain(
+        stream_df.writeStream.foreachBatch(_append),
+        f"band append into {table}",
         # namespaced per target table (see foreach_batch_upsert)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, f"cp_bands_{table}")
-        )
-        .trigger(availableNow=True)
-        .start()
+        checkpoint=os.path.join(checkpoint_dir, f"cp_bands_{table}"),
     )
 
 
@@ -427,7 +444,7 @@ def foreach_batch_dedup_on_arrival(
     id_col: str = "id",
     n_bands: int = 4,
     n_buckets: int = 64,
-) -> "object":
+) -> StreamingQuery:
     """The full continuous-dedup loop, one micro-batch at a time: the
     batch's MinHash bands are APPENDED to the history table FIRST (so
     within-batch duplicates surface too), the batch is then PROBED
@@ -450,7 +467,7 @@ def foreach_batch_dedup_on_arrival(
     the read-side distinct absorbs duplicate verdicts, but duplicate
     band rows inflate bucket sizes against the cap, so exactly-once
     sinks on a cluster would land both appends transactionally.
-    Returns the StreamingQuery handle.
+    Drains the stream and returns the stopped query.
     """
     from ..operators import text as T  # noqa: PLC0415 — avoid module cycle
 
@@ -479,15 +496,11 @@ def foreach_batch_dedup_on_arrival(
             .saveAsTable(pairs_table)
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_step)
+    return drain(
+        stream_df.writeStream.foreachBatch(_step),
+        f"dedup on arrival into {pairs_table}",
         # namespaced per verdict log (see foreach_batch_upsert)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, f"cp_arrival_{pairs_table}"),
-        )
-        .trigger(availableNow=True)
-        .start()
+        checkpoint=os.path.join(checkpoint_dir, f"cp_arrival_{pairs_table}"),
     )
 
 
@@ -586,11 +599,8 @@ def apply_mart_batch(
     import json
 
     legacy_key = "__no_app__"
-    staging = f"{table}__staging"
-    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
-        # crashed between drop and rename: staging IS the committed
-        # snapshot (its _applied_batch proves which batch it includes)
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+    # a promoted staging table's guard proves which batch it includes
+    _promote_orphaned_staging(spark, table)
     key = app_id if app_id is not None else legacy_key
     txns: dict[str, int] = {}
     stored_app = None
@@ -673,20 +683,13 @@ def apply_mart_batch(
         )
     )
     stamped = stamped.localCheckpoint()  # break self-reference before overwrite
-    stamped.write.mode("overwrite").saveAsTable(staging)
     # guard map as table properties ON STAGING, before the swap: the
     # rename carries them, so data + guard commit atomically and an
     # empty mart still fences (see read side above)
-    txns_lit = _sql_str(json.dumps(txns, sort_keys=True))
-    app_lit = _sql_str(last_app or "")
-    spark.sql(
-        f"ALTER TABLE {staging} SET TBLPROPERTIES "
-        f"('{_TXNS_PROP}'={txns_lit}, '{_APP_PROP}'={app_lit})"
-    )
-    if spark.catalog.tableExists(table):
-        spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    spark.catalog.refreshTable(table)
+    _swap_in(spark, table, stamped, props={
+        _TXNS_PROP: json.dumps(txns, sort_keys=True),
+        _APP_PROP: last_app or "",
+    })
     return True
 
 
@@ -696,7 +699,7 @@ def foreach_batch_mart_merge(
     checkpoint_dir: str,
     partial_fn,
     merge_fn,
-) -> "object":
+) -> StreamingQuery:
     """Streaming materialized-view maintenance: keep an aggregate mart
     fresh under continuous ingest by merging each micro-batch's partial
     aggregates into stored state — the streaming twin of the batch
@@ -711,7 +714,8 @@ def foreach_batch_mart_merge(
     raw fact stream is touched exactly once per row, forever.
 
     Exactly-once: see apply_mart_batch (batch-id stamped atomically
-    with the data; checkpoint replays skip).
+    with the data; checkpoint replays skip). Drains the stream and
+    returns the stopped query.
     """
 
     cp_path = os.path.join(checkpoint_dir, f"cp_mart_{table}")
@@ -728,10 +732,8 @@ def foreach_batch_mart_merge(
             app_id=_streaming_app_id(cp_path),
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", cp_path)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        stream_df.writeStream.foreachBatch(_merge).outputMode("update"),
+        f"mart merge into {table}",
+        checkpoint=cp_path,
     )

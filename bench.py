@@ -45,6 +45,7 @@ if REPO not in sys.path:
 
 import __spark_entry__ as entrymod  # noqa: E402
 from _multi_source_retail_data_integration_hub_spark.session import get_spark  # noqa: E402
+from _multi_source_retail_data_integration_hub_spark.streaming import jobs  # noqa: E402
 
 
 def _loadavg() -> float | None:
@@ -101,23 +102,14 @@ def main() -> None:
             F.col("id"), F.current_timestamp().alias("ts")
         ).write.parquet(tiny)
         t0 = time.perf_counter()
-        warm = (
+        jobs.run_available_now(
             spark.readStream.schema("id long, ts timestamp")
             .parquet(tiny)
             .withWatermark("ts", "1 day")
             .groupBy(F.window("ts", "1 day"))
-            .count()
-            .writeStream.format("memory")
-            .queryName("bench_stream_warm")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+            .count(),
+            "bench_stream_warm",
         )
-        try:
-            warm.awaitTermination(120)
-        finally:
-            if warm.isActive:
-                warm.stop()
         spark.catalog.dropTempView("bench_stream_warm")
         streaming_startup_s = round(time.perf_counter() - t0, 3)
     except Exception:  # noqa: BLE001

@@ -3,6 +3,7 @@ the fixpoint semantics; q53's recursive-CTE oracle proves engine parity
 on real near-dup data."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from _multi_source_retail_data_integration_hub_spark.operators.graph import (
     connected_components,
@@ -114,3 +115,53 @@ def test_pagerank_invariant_to_partitioning_and_edge_order(spark):
     df2 = spark.createDataFrame(shuffled, "src string, dst string").repartition(13)
     r_alt = {r.node: r.rank_fp for r in pagerank_fixed_point(df2, iterations=4).collect()}
     assert r_base == r_alt
+
+
+
+
+def test_fast_path_flags_hold_for_every_caller(spark, monkeypatch):
+    """``assume_distinct`` (no duplicate rows; src < dst for connected
+    components) and ``assume_symmetric`` (every dst is also a src) hold
+    on the real inputs of the three callers that pass them, at sf0.001:
+    ``training_data._mutated_clusters`` (q116/q135), q123 and q53. Both
+    operators are swapped, where each caller looks them up, for
+    wrappers that check the contract before calling the real one."""
+    from _multi_source_retail_data_integration_hub_spark.operators import graph
+    from _multi_source_retail_data_integration_hub_spark.plans import (
+        scale_ops,
+        similarity,
+        training_data,
+    )
+
+    real_cc, real_pr = graph.connected_components, graph.pagerank_fixed_point
+    seen = []
+
+    def check(df, src, dst, distinct, oriented=False, symmetric=False):
+        if distinct:
+            assert df.groupBy(src, dst).count().where("count > 1").isEmpty(), "duplicates"
+        if oriented:
+            assert df.where(F.col(src) >= F.col(dst)).isEmpty(), f"{src} >= {dst}"
+        if symmetric:
+            assert df.select(dst).subtract(df.select(src)).isEmpty(), f"{dst} not a {src}"
+
+    def cc(pairs, src="id_a", dst="id_b", *a, assume_distinct=False, **kw):
+        check(pairs, src, dst, assume_distinct, oriented=assume_distinct)
+        seen.append(("cc", assume_distinct))
+        return real_cc(pairs, src, dst, *a, assume_distinct=assume_distinct, **kw)
+
+    def pr(edges, src="src", dst="dst", *a, assume_distinct=False, assume_symmetric=False,
+           **kw):
+        check(edges, src, dst, assume_distinct, symmetric=assume_symmetric)
+        seen.append(("pr", assume_distinct, assume_symmetric))
+        return real_pr(edges, src, dst, *a, assume_distinct=assume_distinct,
+                       assume_symmetric=assume_symmetric, **kw)
+
+    monkeypatch.setattr(graph, "connected_components", cc)
+    monkeypatch.setattr(graph, "pagerank_fixed_point", pr)
+    monkeypatch.setattr(similarity, "connected_components", cc)
+    sf = "/root/testdata/sf0.001"
+    training_data.clear_session_caches()  # else a cached build skips the check
+    assert training_data._mutated_clusters(spark, sf).count() > 0
+    assert scale_ops.q123_supplier_pagerank(spark, sf).count() > 0
+    assert similarity.q53_dup_clusters(spark, sf).count() > 0
+    assert seen == [("cc", True), ("pr", True, True), ("cc", True)]

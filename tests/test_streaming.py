@@ -66,16 +66,18 @@ def test_dedup_stream_drops_duplicates(spark, events_stream):
 
 
 def test_parquet_sink_partitioned(spark, events_stream, tmp_path):
-    out = str(tmp_path / "out")
-    q = jobs.write_stream_parquet(
-        jobs.deduped_events(events_stream), out, str(tmp_path), partition_by=("event_type",)
-    )
-    q.awaitTermination(300)
-    written = spark.read.parquet(out)
-    assert written.count() == load_table(spark, SF_DIR, "events").count()
+    """Two outputs sharing the basename ``out`` under one checkpoint
+    root each get their own checkpoint: a shared one would make the
+    second drain resume the first's offsets and write nothing."""
     import os
 
-    assert any(d.startswith("event_type=") for d in os.listdir(out))
+    n_events = load_table(spark, SF_DIR, "events").count()
+    for out in (str(tmp_path / "out"), str(tmp_path / "b" / "out")):
+        jobs.write_stream_parquet(
+            jobs.deduped_events(events_stream), out, str(tmp_path), partition_by=("event_type",)
+        )
+        assert spark.read.parquet(out).count() == n_events
+        assert any(d.startswith("event_type=") for d in os.listdir(out))
 
 
 def test_stateful_running_totals(spark, events_stream):
@@ -111,10 +113,7 @@ def test_foreach_batch_upsert_matches_batch_agg(spark, events_stream, tmp_path):
             ),
         )
     )
-    q = jobs.foreach_batch_upsert(
-        agg, "t_upsert", ["user_id"], str(tmp_path / "a")
-    )
-    q.awaitTermination(300)
+    jobs.foreach_batch_upsert(agg, "t_upsert", ["user_id"], str(tmp_path / "a"))
     # reader-side hygiene: the table was rewritten by the streaming
     # session's clone, so invalidate this session's cached listing
     spark.catalog.refreshTable("t_upsert")
@@ -132,10 +131,7 @@ def test_foreach_batch_upsert_matches_batch_agg(spark, events_stream, tmp_path):
     assert _rows(spark.table("t_upsert"), cols) == _rows(want, cols)
 
     # redelivery: drain the same source again into the same table
-    q2 = jobs.foreach_batch_upsert(
-        agg, "t_upsert", ["user_id"], str(tmp_path / "b")
-    )
-    q2.awaitTermination(300)
+    jobs.foreach_batch_upsert(agg, "t_upsert", ["user_id"], str(tmp_path / "b"))
     spark.catalog.refreshTable("t_upsert")
     assert _rows(spark.table("t_upsert"), cols) == _rows(want, cols)
 
@@ -187,8 +183,7 @@ def test_foreach_batch_upsert_promotes_orphaned_staging(spark, events_stream, tm
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    q = jobs.foreach_batch_upsert(agg, "t_recover", ["user_id"], str(tmp_path / "cp"))
-    q.awaitTermination(300)
+    jobs.foreach_batch_upsert(agg, "t_recover", ["user_id"], str(tmp_path / "cp"))
     spark.catalog.refreshTable("t_recover")
 
     out = spark.table("t_recover")
@@ -254,10 +249,9 @@ def test_streaming_mart_merge_matches_batch(spark, tmp_path):
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    q = jobs.foreach_batch_mart_merge(
+    jobs.foreach_batch_mart_merge(
         stream, "mart_events_t", str(tmp_path / "cp"), _event_partials, _event_merge
     )
-    assert q.awaitTermination(300)
     got = spark.table("mart_events_t")
     # multiple micro-batches actually merged (not one big batch)
     assert got.agg(F.max("_applied_batch")).first()[0] >= 1
@@ -353,10 +347,9 @@ def test_streaming_mart_checkpoint_recreation_heals(spark, tmp_path):
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        q = jobs.foreach_batch_mart_merge(
+        jobs.foreach_batch_mart_merge(
             stream, "mart_requeue_t", str(tmp_path / "cp"), _event_partials, _event_merge
         )
-        assert q.awaitTermination(300)
 
     run_once()
     cols = ["event_type", "n_events", "sum_value", "min_value", "max_value"]
@@ -534,10 +527,9 @@ def test_streaming_cdc_mart_absorbs_deletes(spark, tmp_path):
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    q = jobs.foreach_batch_mart_merge(
+    jobs.foreach_batch_mart_merge(
         stream, "mart_cdc_stream_t", str(tmp_path / "cp"), signed_partials, signed_merge
     )
-    assert q.awaitTermination(300)
     spark.catalog.refreshTable("mart_cdc_stream_t")
     got = {r.event_type: (r.n_events, float(r.sum_value))
            for r in spark.table("mart_cdc_stream_t").collect()}
@@ -615,3 +607,18 @@ def test_stream_source_reads_directory_shaped_events(spark, tmp_path):
         .collect()
     }
     assert got == want and sum(n for _, n, _ts in got) == src.count()
+
+
+def test_drain_timeout_raises_and_stops_the_query(spark, tmp_path, monkeypatch):
+    """A drain that outlives DRAIN_TIMEOUT_S raises TimeoutError (its
+    sink is partial) and leaves no stream running in the session."""
+    import time
+
+    monkeypatch.setattr(jobs, "DRAIN_TIMEOUT_S", 1)
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    writer = stream.writeStream.foreachBatch(lambda batch_df, batch_id: time.sleep(3))
+    with pytest.raises(TimeoutError, match="slow sink"):
+        jobs.drain(writer, "slow sink", checkpoint=str(tmp_path / "cp"))
+    assert spark.streams.active == []
