@@ -63,6 +63,26 @@ def normalized_text(text: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
 
 
+def _save_bucketed(
+    df: DataFrame, table: str, keys: tuple[str, ...], n_buckets: int | None, mode: str
+) -> None:
+    """Write ``df`` as a table bucketed and sorted by ``keys``.
+
+    An append to an existing table inserts through the table's stored
+    bucket spec (``insertInto``), whatever ``n_buckets`` says: Spark
+    rejects a ``saveAsTable`` append whose ``bucketBy`` differs from the
+    table's. A new table gets ``n_buckets`` buckets, or one per core
+    (``defaultParallelism``) when it is None — one read wave, whatever
+    the host."""
+    spark = df.sparkSession
+    if mode == "append" and spark.catalog.tableExists(table):
+        df.write.insertInto(table)
+        return
+    if n_buckets is None:
+        n_buckets = spark.sparkContext.defaultParallelism
+    df.write.mode(mode).bucketBy(n_buckets, *keys).sortBy(*keys).saveAsTable(table)
+
+
 def write_tokens_bucketed(
     docs: DataFrame,
     text_col: str,
@@ -86,14 +106,9 @@ def write_tokens_bucketed(
     TF-IDF/BM25 shape runs with zero Exchange until its final per-doc
     ranking window (tests/test_bucketing.py asserts the plan).
     """
-    (
-        docs.select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
-        )
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "token")
-        .sortBy("token")
-        .saveAsTable(table)
+    _save_bucketed(
+        docs.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")),
+        table, ("token",), n_buckets, "overwrite",
     )
 
 
@@ -337,8 +352,8 @@ def write_winnow_index_bucketed(
     bucketed (and sorted) by ``fp_hash`` — the winnowing member of the
     persisted-bucketed family, and the most literal one: a MOSS-style
     deployment maintains exactly this inverted index, appending each
-    ingest batch's fingerprints (``mode="append"``, same per-batch
-    ingest contract as ``write_signatures_bucketed``), and every
+    ingest batch's fingerprints (``mode="append"`` inserts through the
+    stored bucket spec, as in ``write_signatures_bucketed``), and every
     copy-detection pass reads it back. Downstream the DF count, the
     boilerplate guard and the cross-doc self-join are all
     fp_hash-keyed, so ``winnowing_matches_from_index`` runs with one
@@ -355,13 +370,10 @@ def write_winnow_index_bucketed(
         if selection is not None
         else winnow_selection(df, text_col, id_col, k, w)
     )
-    (
+    _save_bucketed(
         selected.select(F.col(id_col), F.shiftright("fp_key", 22).alias("fp_hash"))
-        .distinct()
-        .write.mode(mode)
-        .bucketBy(n_buckets, "fp_hash")
-        .sortBy("fp_hash")
-        .saveAsTable(table)
+        .distinct(),
+        table, ("fp_hash",), n_buckets, mode,
     )
 
 
@@ -722,40 +734,33 @@ def minhash_signatures(
         if shingles_df is not None
         else distinct_shingles(df, text_col, id_col, shingle_k)
     )
-    h = F.md5(F.col("shingle"))
-    base = sh.select(
-        F.col(id_col),
-        F.conv(h.substr(1, 8), 16, 10).cast("bigint").alias("ha"),
-        F.conv(h.substr(9, 8), 16, 10).cast("bigint").alias("hb"),
+    # SQL text, not Column trees: a Column costs a py4j round trip per
+    # operator and literal, and this plan is rebuilt per micro-batch
+    # and per cold pass (tests/test_training_ops.py bounds the calls)
+    base = sh.selectExpr(
+        f"`{id_col}`",
+        "CAST(conv(substr(md5(shingle), 1, 8), 16, 10) AS BIGINT) AS ha",
+        "CAST(conv(substr(md5(shingle), 9, 8), 16, 10) AS BIGINT) AS hb",
     )
-    aggs = [
-        F.min(F.pmod(F.col("ha") + F.lit(s) * F.col("hb"), F.lit(MINHASH_P))).alias(f"mh{s:02d}")
+    sig = base.groupBy(id_col).agg(*[
+        F.expr(f"min(pmod(ha + {s} * hb, {MINHASH_P})) AS mh{s:02d}")
         for s in range(num_hashes)
-    ]
-    sig = base.groupBy(id_col).agg(*aggs)
+    ])
     n_bands = num_hashes // band_size
-    band_cols = [
-        F.md5(
-            F.concat_ws("|", *[F.col(f"mh{b * band_size + j:02d}") for j in range(band_size)])
-        ).alias(f"band{b}")
+    return sig.selectExpr("*", *[
+        "md5(concat_ws('|', "
+        + ", ".join(f"mh{b * band_size + j:02d}" for j in range(band_size))
+        + f")) AS band{b}"
         for b in range(n_bands)
-    ]
-    return sig.select(F.col(id_col), *[F.col(f"mh{s:02d}") for s in range(num_hashes)], *band_cols)
+    ])
 
 
 def _melt_bands(sig: DataFrame, id_col: str, n_bands: int) -> DataFrame:
     """(id, band_id, bucket) rows — one per (doc, band)."""
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), F.col(f"band{b}").alias("bucket"))
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band_id").alias("band_id"), F.col("bb.bucket").alias("bucket"))
+    structs = ", ".join(
+        f"struct({b} AS band_id, band{b} AS bucket)" for b in range(n_bands)
+    )
+    return sig.selectExpr(f"`{id_col}`", f"inline(array({structs}))")
 
 
 def lsh_hot_buckets(
@@ -844,7 +849,7 @@ def write_signatures_bucketed(
     table: str,
     id_col: str = "id",
     n_bands: int = 4,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Persist the melted LSH band table ``(id, band_id, bucket)``
@@ -862,18 +867,20 @@ def write_signatures_bucketed(
     the within-bucket self-join all reuse the scan's hash
     partitioning (tests/test_bucketing.py asserts the plan).
 
+    ``n_buckets`` defaults to one bucket per core
+    (``defaultParallelism``, read when the table is created): the
+    candidate read is then one wave of tasks. Every bucket beyond that
+    adds a task to each read and a file to each append, whatever the
+    data size.
+
     ``mode="append"`` is the per-batch ingest path: each new batch's
-    bands land in the same bucket layout (Spark routes appended rows
-    into the existing bucket files' hash space), so history grows
-    in place and the probe/candidate readers keep their plan. The
-    bucket spec must match the table's — Spark raises if it doesn't.
+    bands are inserted through the existing table's stored bucket spec
+    (``n_buckets`` is ignored), so they land in the same bucket hash
+    space, history grows in place and the probe/candidate readers keep
+    their plan.
     """
-    (
-        _melt_bands(sig, id_col, n_bands)
-        .write.mode(mode)
-        .bucketBy(n_buckets, "band_id", "bucket")
-        .sortBy("band_id", "bucket")
-        .saveAsTable(table)
+    _save_bucketed(
+        _melt_bands(sig, id_col, n_bands), table, ("band_id", "bucket"), n_buckets, mode
     )
 
 
@@ -1246,12 +1253,9 @@ def write_simhash_bands_bucketed(
     ``write_tokens_bucketed`` / ``write_members_bucketed``): ingest
     writes fingerprint bands once, every dedup pass reads them back
     with the whole candidate stage reusing the scan partitioning."""
-    (
-        _melt_simhash_bands(sig, id_col, hash_col, bits, n_bands)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "band_id", "bucket")
-        .sortBy("band_id", "bucket")
-        .saveAsTable(table)
+    _save_bucketed(
+        _melt_simhash_bands(sig, id_col, hash_col, bits, n_bands),
+        table, ("band_id", "bucket"), n_buckets, "overwrite",
     )
 
 

@@ -4401,23 +4401,24 @@ def q179_persisted_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
     return T.lsh_candidate_pairs_from_bands(spark.table(table), "id")
 
 
-#: micro-batches the streaming ingest splits the corpus into (q185):
-#: the file stream admits FILES_PER_TRIGGER files per trigger, so the
-#: band table accumulates across genuinely separate foreachBatch
-#: appends. Landing parallelism is deliberately decoupled from batch
-#: count — the landing dir holds BATCHES x FILES_PER_TRIGGER part
-#: files, so the landing write and each batch's scan stay many-way
-#: parallel however few micro-batches the trigger carves (the first
-#: x64 rehearsal tied both to 4 and paid a 4-task corpus shuffle).
+#: micro-batches the streaming ingest splits the corpus into (q185,
+#: q186): the file stream admits 1/INGEST_BATCHES of the landing files
+#: per trigger, so the band table accumulates across genuinely separate
+#: foreachBatch appends. Landing parallelism follows the host, not the
+#: batch count — ``_landing_stream`` writes one part file per core
+#: (at least INGEST_BATCHES, rounded up to a multiple of it), so the
+#: landing write stays one wave of tasks however few micro-batches the
+#: trigger carves (the first x64 rehearsal tied both to 4 and paid a
+#: 4-task corpus shuffle on 32 cores): 4 files and 1 per trigger on 4
+#: cores, 32 files and 8 per trigger on 32.
 INGEST_BATCHES = 4
-INGEST_FILES_PER_TRIGGER = 8
 
 
 def _landing_stream(spark: SparkSession, sf_dir: str, scratch_name: str):
-    """Land the mutated corpus as ``INGEST_BATCHES x
-    INGEST_FILES_PER_TRIGGER`` parquet part files under a fresh
-    warehouse scratch dir and return ``(stream_df, scratch_dir)`` — a
-    file stream admitting ``INGEST_FILES_PER_TRIGGER`` files per
+    """Land the mutated corpus as ``max(INGEST_BATCHES, cores)`` parquet
+    part files (rounded up to a multiple of ``INGEST_BATCHES``) under a
+    fresh warehouse scratch dir and return ``(stream_df, scratch_dir)``
+    — a file stream admitting ``1/INGEST_BATCHES`` of the files per
     trigger, i.e. ``INGEST_BATCHES`` genuine micro-batches. Scratch
     (landing + stream checkpoint) is reset per ingest; the
     per-(session, sf_dir) guard in ``_persisted_table`` means each
@@ -4429,12 +4430,13 @@ def _landing_stream(spark: SparkSession, sf_dir: str, scratch_name: str):
     scratch = os.path.join(root, f"{scratch_name}_{_sf_tag(sf_dir)}")
     shutil.rmtree(scratch, ignore_errors=True)
     landing = os.path.join(scratch, "landing")
+    files_per_trigger = -(-spark.sparkContext.defaultParallelism // INGEST_BATCHES)
     _mutated(spark, sf_dir).repartition(
-        INGEST_BATCHES * INGEST_FILES_PER_TRIGGER
+        INGEST_BATCHES * files_per_trigger
     ).write.parquet(landing)
     stream = (
         spark.readStream.schema("id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", INGEST_FILES_PER_TRIGGER)
+        .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(landing)
     )
     return stream, scratch

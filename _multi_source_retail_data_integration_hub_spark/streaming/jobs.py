@@ -395,12 +395,16 @@ def foreach_batch_band_append(
     checkpoint_dir: str,
     id_col: str = "id",
     n_bands: int = 4,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
 ) -> StreamingQuery:
     """Continuous-ingest sink for the persisted LSH band table: each
     micro-batch of ``(id, text)`` documents is MinHash-signed and its
     melted band rows APPENDED to the bucketed history table
     (``operators/text.py::write_signatures_bucketed(mode="append")``).
+    The first batch creates the table with ``n_buckets`` buckets (one
+    per core when None); every later batch, and any replay, inserts
+    through that stored bucket spec, so each batch writes at most one
+    file per bucket.
 
     This is the 100 TB shape the band table's docstring promises: the
     ingestion job signs documents as they arrive (signing is per-doc
@@ -443,7 +447,7 @@ def foreach_batch_dedup_on_arrival(
     checkpoint_dir: str,
     id_col: str = "id",
     n_bands: int = 4,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
 ) -> StreamingQuery:
     """The full continuous-dedup loop, one micro-batch at a time: the
     batch's MinHash bands are APPENDED to the history table FIRST (so
@@ -451,7 +455,10 @@ def foreach_batch_dedup_on_arrival(
     against everything that has ever arrived
     (``lsh_probe_pairs_from_bands`` — history side Exchange-free off
     its bucketing), and the batch's verdicts land in an append-only
-    pairs log normalized to the ``id_a < id_b`` convention.
+    pairs log normalized to the ``id_a < id_b`` convention. The history
+    table's bucket count is fixed by the first batch, as in
+    ``foreach_batch_band_append`` (one bucket per core when
+    ``n_buckets`` is None).
 
     Arrival-order independence: an unordered pair is logged exactly
     when its LATER member's batch probes (the earlier member is

@@ -60,6 +60,42 @@ def test_transform_gate_trips(spark, raw):
         )
 
 
+def test_transform_gate_trip_writes_nothing(spark, raw):
+    """A transform-gate failure on a run that WOULD load must stop
+    before the first write: none of the 9 warehouse tables and no
+    etl_run_log row appear."""
+    raw_sales, raw_products, cats = raw
+    spark.sql("DROP DATABASE IF EXISTS gate_dw CASCADE")
+    with pytest.raises(pipeline.PipelineGateError, match="transform gate"):
+        pipeline.run_pipeline(
+            spark, raw_sales, raw_products, cats, database="gate_dw",
+            run_ts=RUN_TS, thresholds={"fact_sales": 10_000},
+        )
+    names = [
+        "stg_retail_sales", "stg_api_products", "dim_date", "dim_customer",
+        "dim_product", "dim_product_category", "fact_sales",
+        "mart_sales_performance", "mart_category_analysis", "etl_run_log",
+    ]
+    try:
+        assert [n for n in names if spark.catalog.tableExists(f"gate_dw.{n}")] == []
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS gate_dw CASCADE")
+
+
+def test_load_gate_trips_on_empty_written_table(spark):
+    """validate_load fails a load whose written table is empty and
+    names it; a load whose tables all hold rows passes."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS loadgate_dw")
+    try:
+        spark.range(3).write.mode("overwrite").saveAsTable("loadgate_dw.full_tbl")
+        spark.range(0).write.mode("overwrite").saveAsTable("loadgate_dw.empty_tbl")
+        pipeline.validate_load(spark, "loadgate_dw", ["full_tbl"])
+        with pytest.raises(pipeline.PipelineGateError, match=r"load gate failed.*empty_tbl"):
+            pipeline.validate_load(spark, "loadgate_dw", ["full_tbl", "empty_tbl"])
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS loadgate_dw CASCADE")
+
+
 def test_extract_gate_trips(spark, raw):
     raw_sales, raw_products, cats = raw
     with pytest.raises(pipeline.PipelineGateError, match="extract gate"):

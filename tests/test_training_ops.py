@@ -67,6 +67,34 @@ def test_minhash_identical_docs_share_signature(docs):
     assert all(rows[1][f"band{b}"] == rows[2][f"band{b}"] for b in range(4))
 
 
+def test_signing_plan_build_stays_cheap(spark, monkeypatch):
+    """Building the MinHash signing plan (minhash_signatures +
+    _melt_bands) is driver work paid by every streaming micro-batch
+    and every cold pass. Built from SQL text it takes ~300 py4j round
+    trips; a Column tree, one round trip per operator and literal,
+    takes ~2,300. The melted band table keeps its schema."""
+    import py4j.clientserver as cs
+
+    small = spark.createDataFrame([(1, "a b c d e"), (2, "a b c d f")], "id BIGINT, text STRING")
+    send = cs.ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(self, command, *args, **kwargs):
+        # not counted: memory commands ("m"), the releases of JVM
+        # handles that other code dropped, whose timing is the GC's
+        calls[0] += not command.startswith("m\n")
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    melted = T._melt_bands(T.minhash_signatures(small, "text", "id"), "id", 4)
+    monkeypatch.undo()
+    assert calls[0] <= 400, f"{calls[0]} py4j calls to build the signing plan"
+    assert [(f.name, f.dataType.simpleString()) for f in melted.schema.fields] == [
+        ("id", "bigint"), ("band_id", "int"), ("bucket", "string")
+    ]
+    assert melted.count() == 2 * 4
+
+
 def test_lsh_candidates_contain_exact_dup_pair(docs):
     sig = T.minhash_signatures(docs.where(F.col("doc_id") <= 4), "text", "doc_id")
     pairs = {(r.id_a, r.id_b) for r in T.lsh_candidate_pairs(sig, "doc_id").collect()}
