@@ -24,10 +24,7 @@ from ..operators.quantiles import (
     histogram_bucket_map,
 )
 from ..sources.testdata import load_table
-from .registry import dsum, query
-
-# Money aggregation type (keep Spark + oracle in lockstep; see dsum).
-DEC = "decimal(18,2)"
+from .registry import DEC, dsum, query
 
 
 # ---------------------------------------------------------------------------
@@ -489,7 +486,7 @@ def q52_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return no_orders.groupBy(F.col("c_mktsegment").alias("mktsegment")).agg(
         F.count("*").alias("n_customers_no_orders"),
-        F.sum(F.col("c_acctbal").cast(DEC)).cast("double").alias("acctbal_sum"),
+        dsum("c_acctbal").alias("acctbal_sum"),
     )
 
 
@@ -733,7 +730,7 @@ def q58_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     avgs = customer.groupBy("c_nationkey").agg(
-        (F.sum(F.col("c_acctbal").cast(DEC)).cast("double") / F.count("*")).alias(
+        (dsum("c_acctbal") / F.count("*")).alias(
             "nation_avg"
         )
     )
@@ -746,7 +743,7 @@ def q58_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         above.groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count("*").alias("n_above_avg"),
-            F.sum(F.col("c_acctbal").cast(DEC)).cast("double").alias("above_sum"),
+            dsum("c_acctbal").alias("above_sum"),
         )
         .orderBy("nation")
     )
@@ -1029,7 +1026,7 @@ def q76_spend_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = (
         customer.join(orders, customer.c_custkey == orders.o_custkey)
         .groupBy("c_nationkey", "c_custkey")
-        .agg(F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("total_spend"))
+        .agg(dsum("o_totalprice").alias("total_spend"))
     )
     w = Window.partitionBy("c_nationkey").orderBy("total_spend")
     return spend.select(

@@ -10,9 +10,7 @@ from pyspark.sql import functions as F
 
 from ..functions import derived
 from ..sources.testdata import load_table
-from .registry import query
-
-DEC = "decimal(18,2)"
+from .registry import DEC, dsum, query
 
 
 # ---------------------------------------------------------------------------
@@ -114,11 +112,11 @@ def q10_row_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q11_kpi_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     kpis = orders.agg(
-        F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("total_revenue"),
+        dsum("o_totalprice").alias("total_revenue"),
         F.count("*").alias("total_orders"),
         F.countDistinct("o_custkey").alias("unique_customers"),
         (
-            F.sum(F.col("o_totalprice").cast(DEC)).cast("double")
+            dsum("o_totalprice")
             / F.nullif(F.count("*"), F.lit(0))
         ).alias("avg_order_value"),
         F.min("o_totalprice").alias("min_order"),
@@ -387,10 +385,10 @@ def q43_multiselect_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("total_revenue"),
+            dsum("o_totalprice").alias("total_revenue"),
             F.countDistinct("o_custkey").alias("unique_customers"),
             (
-                F.sum(F.col("o_totalprice").cast(DEC)).cast("double")
+                dsum("o_totalprice")
                 / F.nullif(F.count("*"), F.lit(0))
             ).alias("avg_order_value"),
         )

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import dsum, query
+from .registry import DEC, dsum, query
 
 SESSION_GAP_US = 12 * 3600 * 1_000_000  # 12 hours of inactivity ends a session
 
@@ -27,8 +27,6 @@ SESSION_GAP_US = 12 * 3600 * 1_000_000  # 12 hours of inactivity ends a session
 import itertools as _itertools  # noqa: E402
 
 _VIEW_SEQ = _itertools.count()
-
-DEC = "decimal(18,2)"
 
 
 # ---------------------------------------------------------------------------
@@ -458,7 +456,7 @@ def q69_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("session_value"),
+            dsum("value").alias("session_value"),
         )
         .select(
             "user_id",

@@ -24,9 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import query
-
-DEC = "decimal(18,2)"
+from .registry import DEC, query
 
 
 # ---------------------------------------------------------------------------

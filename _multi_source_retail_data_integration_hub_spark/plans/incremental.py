@@ -45,9 +45,8 @@ from pyspark.sql import functions as F
 
 from ..operators.checkpointing import materialize
 from ..sources.testdata import load_table
-from .registry import query
+from .registry import DEC, query
 
-DEC = "decimal(18,2)"
 CUTOFF = "1997-01-01"  # orders before this date are the "stored history"
 
 

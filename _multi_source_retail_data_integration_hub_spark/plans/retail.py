@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cleansing, derived
 from ..operators.scd2 import scd2_initial
-
-DEC = "decimal(18,2)"
+from .registry import DEC, dsum
 
 
 # ---------------------------------------------------------------------------
@@ -266,11 +265,11 @@ def build_mart_sales_performance(
         "left",
     )
     monthly = mart.groupBy("year", "month", "month_name").agg(
-        F.sum(F.col("total_amount").cast(DEC)).cast("double").alias("total_revenue"),
+        dsum("total_amount").alias("total_revenue"),
         F.countDistinct("transaction_id").alias("total_transactions"),
         F.sum("quantity").alias("total_quantity"),
         (
-            F.sum(F.col("total_amount").cast(DEC)).cast("double")
+            dsum("total_amount")
             / F.nullif(F.count("total_amount"), F.lit(0))
         ).alias("avg_order_value"),
         F.countDistinct("customer_id").alias("unique_customers"),
@@ -297,11 +296,11 @@ def build_mart_category_analysis(
         F.countDistinct("transaction_id").alias("total_transactions"),
         F.sum("quantity").alias("total_quantity"),
         (
-            F.sum(F.col("price_per_unit").cast(DEC)).cast("double")
+            dsum("price_per_unit")
             / F.nullif(F.count("price_per_unit"), F.lit(0))
         ).alias("avg_price"),
         (
-            F.sum(F.col("total_amount").cast(DEC)).cast("double")
+            dsum("total_amount")
             / F.nullif(F.count("total_amount"), F.lit(0))
         ).alias("avg_order_value"),
         F.countDistinct("customer_id").alias("unique_customers"),

@@ -14,9 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import query
-
-DEC = "decimal(18,2)"
+from .registry import dsum, query
 
 
 @query(
@@ -44,7 +42,7 @@ def q38_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping(F.col("year")).cast("int").alias("is_year_total"),
             F.grouping(F.col("quarter")).cast("int").alias("is_quarter_total"),
             F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("total_revenue"),
+            dsum("o_totalprice").alias("total_revenue"),
         )
         .select(
             "year", "quarter", "is_year_total", "is_quarter_total", "n_orders", "total_revenue"
@@ -91,7 +89,7 @@ def q46_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping(F.col("year")).cast("int").alias("is_year_total"),
             F.grouping(F.col("mktsegment")).cast("int").alias("is_segment_total"),
             F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("total_revenue"),
+            dsum("o_totalprice").alias("total_revenue"),
         )
         .select(
             "year", "mktsegment", "is_year_total", "is_segment_total",

@@ -24,10 +24,8 @@ from ..operators import sampling, skew
 from ..operators import sketches as SK
 from ..operators.text import tokens
 from ..sources.testdata import fan_out, load_table
-from .registry import query
+from .registry import DEC, dsum, query
 from .training_data import _TOKS  # shared token-list SQL fragment
-
-DEC = "decimal(18,2)"
 
 
 # ---------------------------------------------------------------------------
@@ -53,7 +51,7 @@ def q33_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "k_bucket")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
     )
 
@@ -165,7 +163,7 @@ def q45_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sampled.groupBy("event_type").agg(
         F.count("*").alias("n_sampled"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("sampled_value"),
+        dsum("value").alias("sampled_value"),
     )
 
 

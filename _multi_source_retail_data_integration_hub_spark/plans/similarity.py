@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..operators import similarity as S
 from ..operators.graph import connected_components
 from ..sources.testdata import load_table
-from .registry import query
+from .registry import id_offset, id_offset_sql, query
 
 QUERY_STRIDE = 25
 
@@ -210,7 +210,7 @@ def q42_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q37 — embedding-cosine near-duplicate detection (dedup family)
 # The sf corpus has no near-identical vectors, so the query augments it
-# with deterministic perturbations (last 8 dims zeroed, id + 100000):
+# with deterministic perturbations (last 8 dims zeroed, id + id_offset):
 # cos(orig, mutant) = ||e[:56]|| / ||e|| ~= 0.94. Candidates come from
 # the LSH bucket equi-join (small perturbations mostly preserve
 # hyperplane signs), hot buckets subsplit past EMB_LSH_MAX_BUCKET
@@ -219,14 +219,7 @@ def q42_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At 100 TB this is the standard embedding-dedup shape: bucket ->
 # within-bucket exact verify -> keep min-id canonical.
 # ---------------------------------------------------------------------------
-NEARDUP_OFFSET = 100_000
 NEARDUP_THRESHOLD = 0.9
-
-# mutant ids must never collide with real vec_ids: beyond 100k vectors
-# the offset grows with the corpus (GREATEST keeps small-SF results
-# byte-identical). The oracle computes the same offset with a scalar
-# subquery; the Spark side mirrors it with one tiny max() action.
-_OFFSET_SQL = f"GREATEST({NEARDUP_OFFSET}, (SELECT MAX(vec_id) + 1 FROM embeddings))"
 
 
 def _augmented_sql() -> str:
@@ -234,7 +227,7 @@ def _augmented_sql() -> str:
     return f"""
       SELECT vec_id, embedding FROM embeddings
       UNION ALL
-      SELECT vec_id + {_OFFSET_SQL} AS vec_id,
+      SELECT vec_id + {id_offset_sql("embeddings", "vec_id")} AS vec_id,
              list_concat(list_slice(embedding, 1, 56), [{zeros}]) AS embedding
       FROM embeddings
     """
@@ -274,26 +267,18 @@ _NEARDUP_CTES = f"""
 def _augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Base corpus + deterministic near-dup mutants (the q37 data
     augmentation), shared by the near-dup pair stage and q158's
-    negative-pair embedding lookups. The lazy PLAN is a session_table
-    because building it costs a driver action — the max(vec_id) offset
-    probe — that repeated callers (q158 touches this once directly and
-    once via the pair stage; bench runs twice) should not re-pay. The
-    frame itself stays unmaterialized: it is a cheap projection both
-    consumers fold into their own pipelines."""
-    from .training_data import session_table
+    negative-pair embedding lookups. It stays unmaterialized: a cheap
+    projection both consumers fold into their own pipelines."""
+    from .training_data import column_max
 
-    def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        max_id = emb.agg(F.max("vec_id")).first()[0] or 0
-        offset = max(NEARDUP_OFFSET, max_id + 1)
-        zeros = F.array(*[F.lit(0.0).cast("float")] * 8)
-        mutants = emb.select(
-            (F.col("vec_id") + offset).alias("vec_id"),
-            F.concat(F.slice("embedding", 1, 56), zeros).alias("embedding"),
-        )
-        return emb.select("vec_id", "embedding").unionByName(mutants)
-
-    return session_table(spark, sf_dir, "aug", build)
+    emb = load_table(spark, sf_dir, "embeddings")
+    offset = id_offset(column_max(spark, sf_dir, "embeddings", "vec_id"))
+    zeros = F.array(*[F.lit(0.0).cast("float")] * 8)
+    mutants = emb.select(
+        (F.col("vec_id") + offset).alias("vec_id"),
+        F.concat(F.slice("embedding", 1, 56), zeros).alias("embedding"),
+    )
+    return emb.select("vec_id", "embedding").unionByName(mutants)
 
 
 def _bucket_pair_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,8 +290,8 @@ def _bucket_pair_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-pair table every downstream consumer filters its own
     way. Function-level import — q157 imports this module at module
     level, so the reverse import must stay deferred. The uncached
-    pipeline stays snapshot in PLANS.md via tools/dump_plans.py's
-    EXTRA_PLANS."""
+    pipeline's plan is written on demand by tools/dump_plans.py
+    (EXTRA_PLANS)."""
     from .training_data import session_table
 
     return session_table(spark, sf_dir, "embcand", lambda: (
@@ -973,21 +958,17 @@ def q173_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "semassign") and the centroid broadcast handle is shared by the
 # member and batch probe stages.
 # ---------------------------------------------------------------------------
-_PROBE_OFFSET_SQL = (
-    "GREATEST(200000, 2 * (SELECT MAX(vec_id) + 1 FROM embeddings))"
-)
-
-
 def _probe_batch_sql() -> str:
     zeros8 = ", ".join(["CAST(0.0 AS FLOAT)"] * 8)
     zeros32 = ", ".join(["CAST(0.0 AS FLOAT)"] * 32)
+    offset = id_offset_sql("embeddings", "vec_id", 2)
     return f"""
-      SELECT vec_id + {_PROBE_OFFSET_SQL} AS batch_id,
+      SELECT vec_id + {offset} AS batch_id,
              list_concat(list_slice(embedding, 1, 56), [{zeros8}])
                AS embedding
       FROM embeddings WHERE vec_id % 20 = 1
       UNION ALL
-      SELECT vec_id + {_PROBE_OFFSET_SQL} AS batch_id,
+      SELECT vec_id + {offset} AS batch_id,
              list_concat([{zeros32}],
                          list_slice(embedding, 33, 64)) AS embedding
       FROM embeddings WHERE vec_id % 20 = 11
@@ -999,10 +980,10 @@ def _semdedup_base_assigned(spark: SparkSession, sf_dir: str):
     handle) for the ingest path. Distinct from q167's "semassign"
     session table, which assigns the AUGMENTED corpus; the ingest
     contract is that arriving batches join the REAL corpus's clusters.
-    A session_table, so repeated probes (bench RUNS=2, multiple
-    batches per session) re-pay neither the corpus assignment nor the
-    centroid broadcast; both probe stages share the ONE broadcast
-    handle per ivf_probes' own guidance."""
+    A session_table, so repeated probes (several batches per session)
+    re-pay neither the corpus assignment nor the centroid broadcast;
+    both probe stages share the ONE broadcast handle per ivf_probes'
+    own guidance."""
     from ..operators.checkpointing import materialize
     from .training_data import session_table
 
@@ -1057,9 +1038,10 @@ def _semdedup_base_assigned(spark: SparkSession, sf_dir: str):
     """,
 )
 def q178_semdedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .training_data import column_max
+
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0] or 0
-    offset = max(200_000, 2 * (max_id + 1))
+    offset = id_offset(column_max(spark, sf_dir, "embeddings", "vec_id"), 2)
     zeros8 = F.array(*[F.lit(0.0).cast("float")] * 8)
     zeros32 = F.array(*[F.lit(0.0).cast("float")] * 32)
     near = emb.where(F.col("vec_id") % 20 == 1).select(

@@ -23,9 +23,7 @@ from pyspark.sql import functions as F
 from ..operators.asof import asof_join
 from ..operators.ranges import interval_join
 from ..sources.testdata import load_table
-from .registry import query
-
-DEC = "decimal(18,2)"
+from .registry import dsum, query
 
 
 @query(
@@ -103,5 +101,5 @@ def q44_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("purchase_id", "user_id").agg(
         F.count("*").alias("n_window_events"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("window_value"),
+        dsum("value").alias("window_value"),
     )

@@ -38,9 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .registry import query
-
-DEC = "decimal(18,2)"
+from .registry import DEC, dsum, query
 
 
 def _rev_dec() -> F.Column:
@@ -426,7 +424,7 @@ def q94_small_order_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return small.agg(
         F.count("*").alias("n_small_lines"),
-        (F.sum(F.col("l_extendedprice").cast(DEC)).cast("double") / 7.0).alias(
+        (dsum("l_extendedprice") / 7.0).alias(
             "avg_yearly"
         ),
     )
@@ -706,7 +704,7 @@ def q99_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scalar average: exact decimal sum / exact count, divided in double
     avg_bal = eligible.agg(
         (
-            F.sum(F.col("c_acctbal").cast(DEC)).cast("double") / F.count("*")
+            dsum("c_acctbal") / F.count("*")
         ).alias("avg_acctbal")
     )
     return (
@@ -720,7 +718,7 @@ def q99_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("code")
         .agg(
             F.count("*").alias("n_custs"),
-            F.sum(F.col("c_acctbal").cast(DEC)).cast("double").alias(
+            dsum("c_acctbal").alias(
                 "total_acctbal"
             ),
         )

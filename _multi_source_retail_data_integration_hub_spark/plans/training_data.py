@@ -24,21 +24,10 @@ from ..operators import sampling
 from ..operators import text as T
 from ..operators.checkpointing import materialize
 from ..sources.testdata import fan_out, load_table
-from .registry import ORACLE, query
+from .registry import ORACLE, id_offset, id_offset_sql, query
 
-# id offset for synthetic second-snapshot docs. Env-overridable so
-# corpora larger than the default bound (e.g. tools/scale_rehearsal.py
-# manufactures >x10 corpora whose doc_ids exceed 100k) can raise it:
-# BOTH the Spark plans and every DuckDB oracle string below derive
-# from this one constant at import time, so Spark/oracle parity holds
-# at any setting. Must stay a positive multiple of 5 — q22 samples the
-# augmented corpus with `id % 5 = 0`, which must hit originals and
-# their +OFFSET mutants identically.
-OFFSET = int(os.environ.get("SPARK_GRAFT_DOC_OFFSET", "100000"))
-if OFFSET <= 0 or OFFSET % 5:
-    raise ValueError(
-        f"SPARK_GRAFT_DOC_OFFSET must be a positive multiple of 5, got {OFFSET}"
-    )
+# synthetic doc ids are doc_id + this (the oracles' id_offset)
+_DOC_OFFSET_SQL = id_offset_sql("documents", "doc_id")
 
 # Token-list SQL fragments shared by the oracles (DuckDB dialect).
 _TOKS = (
@@ -60,56 +49,37 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fan_out(load_table(spark, sf_dir, "documents"))
 
 
-def _docs_max_id(spark: SparkSession, sf_dir: str) -> int:
-    """Max doc_id of the raw documents table, computed ONCE per
-    (session, sf_dir) and memoized (r13 optimization, guide §1.2:
-    don't recompute what can't change). Every ``_guard_offset``
-    consumer guards the same immutable scan, so one max-aggregate job
-    per session replaces one per query build (~13 call sites). The
-    scan is the un-fanned ``load_table`` frame: a max over one column
-    needs no repartition Exchange."""
-    return session_table(spark, sf_dir, "max_doc_id", lambda: (
-        load_table(spark, sf_dir, "documents").agg(F.max("doc_id")).first()[0] or 0
+def column_max(
+    spark: SparkSession, sf_dir: str, table: str = "documents", col: str = "doc_id"
+) -> int | None:
+    """Max ``col`` of the raw ``table`` (None if empty), computed once
+    per (session, sf_dir, table, col) as a session table: every
+    synthetic-id offset (registry.id_offset) over that table reads the
+    same immutable scan. The scan is the un-fanned ``load_table``
+    frame: a max over one column needs no repartition Exchange."""
+    return session_table(spark, sf_dir, f"max:{table}.{col}", lambda: (
+        load_table(spark, sf_dir, table).agg(F.max(col)).first()[0]
     ))
-
-
-def _guard_offset(
-    spark: SparkSession, sf_dir: str, offset: int = OFFSET, label: str = "OFFSET"
-) -> None:
-    """A synthetic id offset must not collide with real doc ids —
-    fail loudly instead of corrupting dedup/probe results. Shared by
-    the doubled/mutated corpora and q125's ingest batch. The
-    supported growth path is the SPARK_GRAFT_DOC_OFFSET env override
-    (validated at import: positive multiple of 5, which q22's 1-in-5
-    sample relies on), set before the module is imported."""
-    max_id = _docs_max_id(spark, sf_dir)
-    if max_id >= offset:
-        raise ValueError(
-            f"documents corpus max doc_id {max_id} >= synthetic {label} "
-            f"{offset}; set SPARK_GRAFT_DOC_OFFSET (a positive multiple "
-            "of 5, before import) above this corpus's max doc_id"
-        )
 
 
 def _doubled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two identical crawl snapshots: every text appears twice."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    _guard_offset(spark, sf_dir)
-    return d.unionByName(d.select((F.col("doc_id") + OFFSET).alias("doc_id"), "text"))
+    off = id_offset(column_max(spark, sf_dir))
+    return d.unionByName(d.select((F.col("doc_id") + off).alias("doc_id"), "text"))
 
 
 def _mutated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Originals plus a near-duplicate mutation (last 5 tokens dropped)
     of every doc longer than 15 tokens — guaranteed high-Jaccard pairs."""
-    d0 = _docs(spark, sf_dir)
-    _guard_offset(spark, sf_dir)
-    d = d0.select(F.col("doc_id").alias("id"), "text")
+    d = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"), "text")
+    off = id_offset(column_max(spark, sf_dir))
     toks = T.tokens(F.col("text"))
     n = F.size(toks)
     mut = (
         d.where(n > 15)
         .select(
-            (F.col("id") + OFFSET).alias("id"),
+            (F.col("id") + off).alias("id"),
             F.concat_ws(" ", F.slice(toks, 1, n - 5)).alias("text"),
         )
     )
@@ -119,7 +89,7 @@ def _mutated(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MUTATED_SQL = f"""
   SELECT doc_id AS id, text FROM documents
   UNION ALL
-  SELECT doc_id + {OFFSET} AS id,
+  SELECT doc_id + {_DOC_OFFSET_SQL} AS id,
          array_to_string(list_slice({_TOKS}, 1, len({_TOKS}) - 5), ' ') AS text
   FROM documents
   WHERE len({_TOKS}) > 15
@@ -274,7 +244,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + {OFFSET} AS doc_id, text FROM documents
+      SELECT doc_id + {_DOC_OFFSET_SQL} AS doc_id, text FROM documents
     )
     SELECT md5(text) AS text_hash,
            COUNT(*) AS n_docs,
@@ -450,7 +420,8 @@ def q20_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + {OFFSET} AS doc_id, replace(upper(text), ' ', '  ') AS text
+      SELECT doc_id + {_DOC_OFFSET_SQL} AS doc_id,
+             replace(upper(text), ' ', '  ') AS text
       FROM documents
     )
     SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
@@ -462,7 +433,7 @@ def q20_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q21_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select("doc_id", "text")
     noised = d.select(
-        (F.col("doc_id") + OFFSET).alias("doc_id"),
+        (F.col("doc_id") + id_offset(column_max(spark, sf_dir))).alias("doc_id"),
         F.replace(F.upper(F.col("text")), F.lit(" "), F.lit("  ")).alias("text"),
     )
     corpus = d.unionByName(noised)
@@ -805,7 +776,7 @@ def q47_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + {OFFSET} AS doc_id, text FROM documents
+      SELECT doc_id + {_DOC_OFFSET_SQL} AS doc_id, text FROM documents
     ),
     dedup AS (SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
     kept AS (
@@ -1556,7 +1527,7 @@ _NEW_SNAPSHOT_SQL = f"""
          CASE WHEN doc_id % 7 = 0 THEN text || ' [rev2]' ELSE text END AS text
   FROM documents WHERE doc_id % 10 <> 0
   UNION ALL
-  SELECT doc_id + {OFFSET} AS doc_id, text FROM documents WHERE doc_id % 13 = 0
+  SELECT doc_id + {_DOC_OFFSET_SQL} AS doc_id, text FROM documents WHERE doc_id % 13 = 0
 """
 
 
@@ -1585,12 +1556,11 @@ def q108_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no nxt match ('deleted'), the rest compare md5(prev) to
     # md5(next-revision) in place, and each %13 row additionally
     # yields its offset copy, which can never match a prev id because
-    # _guard_offset pins max(doc_id) < OFFSET (the same guard the
-    # join form's 'added' classification relied on). The md5 content
+    # id_offset exceeds max(doc_id) (the join form's 'added'
+    # classification relies on the same). The md5 content
     # compare — the thing the diff semantically IS — still runs for
     # every surviving row; what's gone are two extra corpus scans and
     # the full-outer-join shuffle of two md5'd snapshots.
-    _guard_offset(spark, sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     ph = F.md5("text")
     nh = F.when(
@@ -1604,7 +1574,8 @@ def q108_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     own = F.struct(F.col("doc_id").alias("doc_id"), status.alias("status"))
     added = F.struct(
-        (F.col("doc_id") + OFFSET).alias("doc_id"), F.lit("added").alias("status")
+        (F.col("doc_id") + id_offset(column_max(spark, sf_dir))).alias("doc_id"),
+        F.lit("added").alias("status"),
     )
     d = docs.select(
         F.explode(
@@ -2503,8 +2474,8 @@ def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q122's ranked BM25 result, shared with the q157 hybrid fusion —
     a session table (the result is BM25_TOPK rows; in production the
     per-query retrieval runs once and every fusion/rerank stage reads
-    it). The uncached pipeline stays snapshot in PLANS.md via
-    tools/dump_plans.py's EXTRA_PLANS."""
+    it). The uncached pipeline's plan is written on demand by
+    tools/dump_plans.py (EXTRA_PLANS)."""
     return session_table(spark, sf_dir, "bm25", lambda: (
         _bm25_ranked_uncached(spark, sf_dir).localCheckpoint()
     ))
@@ -2617,20 +2588,15 @@ def q124_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is tiny; at 100 TB they live in a stored, bucketed signature table).
 #
 # Batch: every 20th document re-ingested with its last 5 tokens
-# dropped (the q23/q24 near-dup mutation, id + PROBE_OFFSET) —
+# dropped (the q23/q24 near-dup mutation, at the k=2 id offset) —
 # guaranteed high-Jaccard hits against history. The DuckDB twin
 # rebuilds both signature sets with the shared CTE fragments, applies
 # the SAME history-side hot-bucket cap, and the driver hash-compares
 # the exact pair list.
 # ---------------------------------------------------------------------------
-# 2x OFFSET by construction: raw doc_ids are < OFFSET (guarded), so
-# mutant ids (doc_id + OFFSET) are < 2*OFFSET and probe ids
-# (doc_id + PROBE_OFFSET) can never collide with either — the
-# invariant survives any SPARK_GRAFT_DOC_OFFSET override.
-PROBE_OFFSET = 2 * OFFSET
 _PROBE_PRED = "doc_id % 20 = 0"
 _NEW_BATCH_SQL = f"""
-  SELECT doc_id + {PROBE_OFFSET} AS id,
+  SELECT doc_id + {id_offset_sql("documents", "doc_id", 2)} AS id,
          array_to_string(list_slice({_TOKS}, 1, len({_TOKS}) - 5), ' ') AS text
   FROM documents
   WHERE {_PROBE_PRED} AND len({_TOKS}) > 15
@@ -2682,9 +2648,6 @@ def _probe_sql() -> str:
 @query("q125_incremental_neardup", oracle=_probe_sql())
 def q125_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    # synthetic batch ids must not alias real history ids or the pair
-    # list silently corrupts
-    _guard_offset(spark, sf_dir, offset=PROBE_OFFSET, label="PROBE_OFFSET")
     # d is already fanned out by _docs(); no second exchange (r5 ADVICE)
     hist = d.select(F.col("doc_id").alias("id"), "text")
     toks = T.tokens(F.col("text"))
@@ -2692,7 +2655,7 @@ def q125_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = (
         d.where(F.expr(_PROBE_PRED) & (n > 15))
         .select(
-            (F.col("doc_id") + PROBE_OFFSET).alias("id"),
+            (F.col("doc_id") + id_offset(column_max(spark, sf_dir), 2)).alias("id"),
             F.concat_ws(" ", F.slice(toks, 1, n - 5)).alias("text"),
         )
     )
@@ -4109,7 +4072,7 @@ def q170_source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + {OFFSET} AS doc_id, text FROM documents
+      SELECT doc_id + {_DOC_OFFSET_SQL} AS doc_id, text FROM documents
     ),
     canon AS (SELECT md5(text) AS text_hash, MIN(doc_id) AS canonical_id
               FROM corpus GROUP BY 1),
@@ -4170,7 +4133,7 @@ def q171_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with small rows"): the doubled corpus repeats every TEXT
     # verbatim (ids offset), so every row-wise metric — text_hash,
     # gopher features, quality band — is identical between a doc and
-    # its +OFFSET twin. Compute them ONCE over the half corpus, then
+    # its offset twin. Compute them ONCE over the half corpus, then
     # union the re-keyed metric rows: half the per-row CPU at any
     # scale, and the doubling union carries ~5 small columns instead
     # of full text. The captured before-plan evaluated gopher+quality
@@ -4178,9 +4141,9 @@ def q171_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus scans); the metric joins now run over text-free half-
     # corpus rows. The cluster aggregate keys on text_hash exactly as
     # exact_dup_clusters does; canonical_id = min(doc_id) over the
-    # doubled ids = min over the original ids (OFFSET > 0), unchanged.
+    # doubled ids = min over the original ids (offset > 0), unchanged.
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    _guard_offset(spark, sf_dir)
+    off = id_offset(column_max(spark, sf_dir))
     g = T.gopher_rules(docs, "text", "doc_id").select(
         "doc_id",
         "f_word_count",
@@ -4205,7 +4168,7 @@ def q171_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # metric joins once per branch); materialized once because both
     # the cluster aggregate and the funnel join consume it
     corpus_m = half.select(
-        F.explode(F.array(F.col("doc_id"), F.col("doc_id") + OFFSET)).alias(
+        F.explode(F.array(F.col("doc_id"), F.col("doc_id") + off)).alias(
             "doc_id"
         ),
         *metric_cols,

@@ -1428,51 +1428,51 @@ def test_gopher_stopword_case_variants_count_once(spark):
 
 
 # ---------------------------------------------------------------------------
-# SPARK_GRAFT_DOC_OFFSET override (scale-rehearsal corpora)
+# synthetic-id offsets on a corpus whose ids pass ID_OFFSET_UNIT
 # ---------------------------------------------------------------------------
-def test_doc_offset_env_override_reaches_both_engines():
-    """OFFSET/PROBE_OFFSET are import-time constants embedded in every
-    oracle SQL string; the env override must land in BOTH the Python
-    constants and the SQL text (Spark/oracle parity at any setting),
-    and a non-multiple-of-5 must be rejected (q22's 1-in-5 sample).
-    Run in a subprocess: reloading the module in-process would
-    re-register every @query into the live registry."""
-    import json
-    import os
-    import subprocess
-    import sys
+def test_synthetic_ids_clear_a_corpus_past_the_offset_unit(spark, tmp_path):
+    """sf0.001's documents and embeddings plus a copy of every tenth
+    row at id + 100000 (documents also get a suffix token), so doc 10
+    and doc 100010 both exist and a fixed 100000 offset would collide.
+    The derived offset (registry.id_offset) must clear every real id,
+    and the queries built on it must still match their oracles."""
+    import duckdb
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = (
-        "import os, json\n"
-        "os.environ['SPARK_GRAFT_DOC_OFFSET'] = '1000005'\n"
-        "from _multi_source_retail_data_integration_hub_spark.plans import"
-        " training_data as TD\n"
-        "print(json.dumps({'off': TD.OFFSET, 'probe': TD.PROBE_OFFSET,"
-        " 'in_sql': '1000005' in TD._MUTATED_SQL}))\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd=repo
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    got = json.loads(out.stdout.strip().splitlines()[-1])
-    assert got == {"off": 1000005, "probe": 2000010, "in_sql": True}
+    import __spark_entry__ as entry
+    from _multi_source_retail_data_integration_hub_spark.plans import training_data as TD
+    from tools.check_oracle import compare, duck_connection
 
-    bad = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import os\n"
-            "os.environ['SPARK_GRAFT_DOC_OFFSET'] = '100001'\n"
-            "from _multi_source_retail_data_integration_hub_spark.plans import"
-            " training_data\n",
-        ],
-        capture_output=True,
-        text=True,
-        cwd=repo,
-    )
-    assert bad.returncode != 0
-    assert "multiple of 5" in bad.stderr
+    src = "/root/testdata/sf0.001"
+    for table, cols in (
+        ("documents", "doc_id + 100000, text || ' tailcopy', lang, source, n_chars + 9"),
+        ("embeddings", "vec_id + 100000, embedding, label"),
+    ):
+        key = cols.split(" ", 1)[0]
+        duckdb.sql(
+            f"COPY (SELECT * FROM '{src}/{table}.parquet' UNION ALL "
+            f"SELECT {cols} FROM '{src}/{table}.parquet' WHERE {key} % 10 = 0) "
+            f"TO '{tmp_path}/{table}.parquet' (FORMAT parquet)"
+        )
+    sf = str(tmp_path)
+
+    for corpus, col in (
+        (TD._doubled(spark, sf), "doc_id"),
+        (TD._mutated(spark, sf), "id"),
+    ):
+        assert corpus.where(F.col(col) == 100010).count() == 1
+        assert corpus.groupBy(col).count().where("count > 1").count() == 0
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    con = duck_connection(sf)
+    for name in (
+        "q17_exact_dedup",
+        "q21_fingerprint_dedup",
+        "q23_minhash_signatures",
+        "q37_cosine_neardup",
+    ):
+        got = queries[name](spark, sf).toPandas()
+        assert len(got), name
+        assert compare(got, con.execute(oracles[name]).fetchdf()) == [], name
 
 
 def test_q80_audit_sample_headroom(spark):

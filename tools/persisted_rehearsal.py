@@ -26,27 +26,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def _cli_spec(default: str = "64") -> str:
-    """Corpus spec from argv[1]: a plain multiplier (``64``) or the
-    grouped-documents form ``<mult>g<group>`` (``64g8``) that
-    tools/scale_rehearsal.py builds for the winnow match stage (the
-    suffix-only corpus pushes every fingerprint over the boilerplate
-    cap at x64+, so its match join vacuously emits 0 pairs)."""
-    try:
-        spec = str(sys.argv[1])
-        int(spec.split("g")[0])  # validate the numeric multiplier part
-        return spec
-    except (IndexError, ValueError):
-        return default
-
-
-_SPEC = _cli_spec()
-_MULT = int(_SPEC.split("g")[0])
-# raise the synthetic-id offsets BEFORE the plans import (same guard as
-# tools/scale_rehearsal.py — the xN corpus multiplies max doc_id by ~N)
-os.environ.setdefault("SPARK_GRAFT_DOC_OFFSET", str(100_000 * max(_MULT, 1) * 10))
-
 from pyspark.sql import Window, functions as F  # noqa: E402
 
 from _multi_source_retail_data_integration_hub_spark.operators import text as T  # noqa: E402
@@ -202,14 +181,20 @@ STEPS = {
 
 
 def main() -> None:
+    # corpus spec: a plain multiplier (``64``) or the grouped-documents
+    # form ``<mult>g<group>`` (``64g8``) that tools/scale_rehearsal.py
+    # builds for the winnow match stage (the suffix-only corpus pushes
+    # every fingerprint over the boilerplate cap at x64+, so its match
+    # join vacuously emits 0 pairs)
+    spec = sys.argv[1] if len(sys.argv) > 1 else "64"
     names = sys.argv[2:] or list(STEPS)
     bad = [n for n in names if n not in STEPS]
     if bad:
         raise SystemExit(f"unknown steps {bad}; choose from {sorted(STEPS)}")
-    sf = os.path.join(REPO, ".scale_tmp", f"sf0.1x{_SPEC}")
+    sf = os.path.join(REPO, ".scale_tmp", f"sf0.1x{spec}")
     if not os.path.isdir(sf):
         raise SystemExit(
-            f"{sf} missing — build it first: python tools/scale_rehearsal.py {_SPEC}"
+            f"{sf} missing — build it first: python tools/scale_rehearsal.py {spec}"
             " --build-only"
         )
     spark = get_spark("persisted_rehearsal")

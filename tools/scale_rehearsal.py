@@ -28,27 +28,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-# The synthetic-id offsets of the mutant/probe corpora
-# (plans/training_data.py OFFSET / PROBE_OFFSET) are import-time
-# constants guarded against doc_id collisions; a manufactured xN
-# corpus multiplies max doc_id by ~N, so raise the offset BEFORE the
-# registry import (scaled generously: multiple of 5, covers any
-# multiplier this tool accepts). Explicit env settings win.
-def _cli_mult(default: int = 8) -> int:
-    """Multiplier from argv[1]; tolerant so a non-script import (test
-    collection, `from tools import scale_rehearsal`) never parses the
-    importer's argv into an import-time ValueError. Accepts the
-    ``<mult>g<group>`` spec too (``64g8``) — the numeric multiplier is
-    what the id-offset guard needs."""
-    try:
-        return int(str(sys.argv[1]).split("g")[0])
-    except (IndexError, ValueError):
-        return default
-
-
-_MULT = _cli_mult()
-os.environ.setdefault("SPARK_GRAFT_DOC_OFFSET", str(100_000 * max(_MULT, 1) * 10))
-
 import __spark_entry__ as entrymod  # noqa: E402
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -85,9 +64,8 @@ KEY_OFFSETS = {
 }
 OFF = 10_000_000
 # documents get a small per-copy id stride (ids stay dense); the
-# queries' synthetic-snapshot OFFSET guard is satisfied by the
-# SPARK_GRAFT_DOC_OFFSET raise at the top of this module (scaled to
-# the multiplier), not by keeping ids under the 100k default
+# queries' synthetic-id offsets (plans/registry.py id_offset) follow
+# the scaled corpus's max doc_id, so the ids need no headroom
 TABLE_OFF = {"documents": 10_000}
 
 
@@ -191,28 +169,20 @@ def time_query(spark, fn, sf_dir: str, runs: int = 2) -> float:
     return best
 
 
-def _cli_group() -> int | None:
-    """Optional doc-group size from a ``<mult>g<group>`` argv[1] spec
-    (``64g8`` -> groups of 8); None for the default suffix-only corpus."""
-    try:
-        spec = str(sys.argv[1])
-    except IndexError:
-        return None
-    if "g" in spec:
-        try:
-            return int(spec.split("g", 1)[1])
-        except ValueError:
-            return None
-    return None
+def _parse_spec(spec: str) -> tuple[int, int | None]:
+    """``<mult>`` or ``<mult>g<group>`` (``64g8``: groups of 8 for the
+    grouped-documents corpus) -> (multiplier, group size or None)."""
+    mult, _, group = spec.partition("g")
+    return int(mult), (int(group) if group else None)
 
 
 def main() -> None:
     args = sys.argv[1:]
-    mult = _MULT  # parsed once at import, where the offset env is set
+    mult, group = _parse_spec(args[0] if args else "8")
     names = args[1:] or DEFAULT_QUERIES
     spark = get_spark("scale_rehearsal")
     queries = entrymod.queries()
-    scaled_dir = build_scaled(spark, mult, _cli_group())
+    scaled_dir = build_scaled(spark, mult, group)
     if names == ["--build-only"]:
         print(f"built {scaled_dir}")
         return
